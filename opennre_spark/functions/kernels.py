@@ -436,8 +436,7 @@ def bag_average_eval(rep: np.ndarray, weights: dict) -> np.ndarray:
 
 def bag_one_eval(probs: np.ndarray) -> np.ndarray:
     """Per-relation max over per-sentence softmax scores
-    (bag_one.py:140-148). Takes the (n, N) softmaxed sentence scores.
-    This one decomposes associatively -> also expressible as a native
-    Spark groupBy().agg(max()) (see operators/bags.py).
+    (bag_one.py:140-148). Takes the (n, N) softmaxed sentence scores;
+    runs inside the fused bag kernel (operators/bags.py).
     """
     return probs.max(axis=0)

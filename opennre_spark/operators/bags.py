@@ -3,10 +3,13 @@
 A bag = all scored instances sharing (h_id, t_id) — eval-mode
 `entpair_as_bag=True` keying (data_loader.py:160-168; bag_re.py:47,57).
 Spark's shuffle replaces the reference's scope/collate bookkeeping
-(data_loader.py:207-222): groupBy(h_id, t_id) + applyInPandas.
+(data_loader.py:207-222): one hash exchange on (h_id, t_id), an
+external sort by the stable member key, and one streaming mapInArrow
+pass that scores each bag's members and runs the att/avg/one kernel
+(bag_scores_fused — the package's only bag route).
 
 Stable member ordering (A1): rows are sorted by (conv_id, turn_idx,
-pair_turn_idx, h_begin, t_begin) inside each group before the numpy
+pair_turn_idx, h_begin, t_begin) inside each bag before the numpy
 math. `att` is order-sensitive in its float32 sum reductions, so this
 ordering is part of the determinism contract (SURVEY.md §7 hard parts).
 
@@ -15,9 +18,8 @@ Deterministic size cap (A2): the reference uses random.sample
 members of the stable order — documented delta, used as a skew guard for
 hot entity pairs (north rule).
 
-`one` additionally ships as a pure-DataFrame aggregation
-(`bag_one_native`): per-relation max is associative, so Catalyst plans a
-partial (map-side) aggregate before the shuffle — preferred at scale.
+The per-group applyInPandas route, `bag_scores`, is the parity reference
+in tests/oracle/bag_route.py.
 """
 
 from __future__ import annotations
@@ -51,8 +53,9 @@ def resize_bag(pdf: pd.DataFrame, bag_size: int, h_id: str, t_id: str,
 
 def resize_indices(n: int, bag_size: int, h_id: str, t_id: str,
                    seed: int = 42) -> np.ndarray:
-    """The index-selection half of resize_bag, shared by the pandas and
-    Arrow-native bag kernels (identical RNG -> identical rows)."""
+    """The index-selection half of resize_bag, shared by the fused bag
+    walk and the pandas bag assemblies (identical RNG -> identical
+    rows)."""
     seed64 = int.from_bytes(
         hashlib.md5(f"{seed}|{h_id}|{t_id}".encode()).digest()[:8], "little"
     )
@@ -73,306 +76,6 @@ BAG_SCHEMA = T.StructType([
 _SORT_COLS = ["conv_id", "turn_idx", "pair_turn_idx", "h_begin", "t_begin"]
 
 
-def bag_scores(
-    scored: DataFrame,
-    method: str = "att",
-    pcnn: bool = False,
-    bag_cap: int = 0,
-    bag_size: int = 0,
-    bag_seed: int = 42,
-    encoder: str | None = None,
-    schema: str = "reduced",
-    ckpt: str | None = None,
-) -> DataFrame:
-    """Per-bag per-relation score vector via applyInPandas.
-
-    method: 'att' (bag_attention.py:136-164), 'avg'
-    (bag_average.py:117-131), or 'one' (bag_one.py:140-148).
-    'att'/'avg' need the `rep` column (score_instances(with_rep=True));
-    'one' needs only `scores`.
-
-    bag_size > 0 enables the reference's fixed-size resize path
-    (data_loader.py:185-190): sample-down without replacement /
-    pad-up with replacement, seeded per bag key (see resize_bag).
-    It supersedes bag_cap (the cap is the bag_size=0 skew guard).
-    """
-    if method not in ("att", "avg", "one"):
-        raise ValueError(f"unknown bag method {method!r}")
-    if encoder is None:
-        encoder = "pcnn" if pcnn else "cnn"
-    needs_rep = method in ("att", "avg")
-    value_col = "rep" if needs_rep else "scores"
-    cols = ["h_id", "t_id", value_col] + [
-        c for c in _SORT_COLS if c in scored.columns
-    ]
-    sort_cols = [c for c in _SORT_COLS if c in scored.columns]
-    slim = scored.select(*cols)
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        if sort_cols:
-            pdf = pdf.sort_values(sort_cols, kind="mergesort")
-        if bag_size > 0:
-            pdf = resize_bag(
-                pdf, bag_size, pdf["h_id"].iloc[0], pdf["t_id"].iloc[0], bag_seed
-            )
-        elif bag_cap > 0 and len(pdf) > bag_cap:
-            pdf = pdf.iloc[:bag_cap]
-        mat = np.asarray(pdf[value_col].tolist(), dtype=np.float32)
-        if method == "one":
-            out = kernels.bag_one_eval(mat)
-        else:
-            if encoder in ("bert", "bert_entity"):
-                from ..functions.bert_kernels import default_bert_model
-
-                _, weights = default_bert_model(
-                    entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-                )
-                # attention diag: ones (bag_attention.py:29), sized to rep
-                import numpy as _np
-
-                if "att_diag" not in weights:
-                    weights = dict(weights)
-                    weights["att_diag"] = _np.ones(
-                        weights["fc_w"].shape[1], _np.float32
-                    )
-            else:
-                from ..functions.weights import default_model
-
-                _, weights = default_model(
-                    pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-                )
-            if method == "att":
-                out = kernels.bag_attention_eval(mat, weights)
-            else:
-                out = kernels.bag_average_eval(mat, weights)
-        return pd.DataFrame(
-            {
-                "h_id": [pdf["h_id"].iloc[0]],
-                "t_id": [pdf["t_id"].iloc[0]],
-                "n_sentences": [len(pdf)],
-                "scores": [out.astype(np.float32)],
-            }
-        )
-
-    return slim.groupBy("h_id", "t_id").applyInPandas(agg, schema=BAG_SCHEMA)
-
-
-def bag_scores_batched(
-    scored: DataFrame,
-    method: str = "att",
-    bag_cap: int = 0,
-    bag_size: int = 0,
-    bag_seed: int = 42,
-    encoder: str = "cnn",
-    schema: str = "reduced",
-    ckpt: str | None = None,
-) -> DataFrame:
-    """bag_scores with JVM-side bag assembly: groupBy + collect_list
-    builds each bag's member list in the aggregation (associative —
-    map-side partial collection), then ONE mapInPandas pass runs the
-    bag kernel over hundreds of bags per Arrow batch.
-
-    applyInPandas invokes Python once per GROUP; at sf0.1 that is ~15k
-    pandas-function calls whose fixed overhead rivals the attention math
-    itself. Here the per-bag Python cost is one loop iteration. Members
-    are sorted inside the kernel by the same stable key (collect_list
-    order is nondeterministic), so outputs are IDENTICAL to bag_scores
-    (same sorted float32 matrix -> same kernel ops, bitwise).
-
-    Memory note (bag_cap > 0): the deterministic cap is enforced BEFORE
-    the collect_list — a row_number window over the stable member order,
-    filtered <= cap — so the aggregation buffer holds at most bag_cap
-    members even for a pathological hot entity pair (millions of
-    co-mentions would otherwise materialize in ONE buffer before the
-    in-kernel cap could act). WindowExec sorts with a spill-safe external
-    sorter, and its (h_id, t_id) hash partitioning is reused by the
-    groupBy — no extra exchange. The bag_size resize path keeps whole-bag
-    assembly: pad-with-replacement genuinely needs every member.
-    """
-    if method not in ("att", "avg", "one"):
-        raise ValueError(f"unknown bag method {method!r}")
-    needs_rep = method in ("att", "avg")
-    value_col = "rep" if needs_rep else "scores"
-    sort_cols = [c for c in _SORT_COLS if c in scored.columns]
-    # r7 plan rework (guide §5): the r6 shape was groupBy + collect_list
-    # + mapInArrow — correct, but collect_list materializes every bag in
-    # JVM aggregation buffers, and this corpus concentrates millions of
-    # (H,)-dim rep rows into a few THOUSAND bags (sf1.0 bench: 3.38M
-    # members x 928 B into 3,540 bags, hot bag 24k members) — multi-GB
-    # of live UnsafeArrayData across 32 local tasks, GC/spill blowups
-    # and a 2-3x run-to-run spread on kg_bag_att. Same single hash
-    # exchange, but as repartition(h_id, t_id) + sortWithinPartitions
-    # (the spill-SAFE external sorter) + ONE mapInArrow pass that walks
-    # the sorted runs: no aggregation buffer exists at all, rows stream
-    # through Arrow, and Python holds at most one bag's matrix (exactly
-    # what the kernel needs anyway). Members arrive pre-sorted by the
-    # same stable key the r6 kernel lexsorted by, so each bag's float32
-    # matrix — and therefore every kernel output — is bitwise unchanged
-    # (pinned by the bag-path parity tests). The deterministic bag_cap
-    # drops rows past the cap as they stream (bitwise-equal to the r6
-    # row_number window over the same ordering, without the WindowExec
-    # pass); bag_size keeps whole-run assembly (pad-with-replacement
-    # needs every member).
-    part = (
-        scored.select("h_id", "t_id", *sort_cols, value_col)
-        .repartition("h_id", "t_id")
-        .sortWithinPartitions("h_id", "t_id", *sort_cols)
-    )
-
-    def run(batches):
-        weights = (
-            _bag_weights(method, encoder, schema, ckpt) if method != "one" else None
-        )
-
-        def mat_of(rb):
-            n = rb.num_rows
-            vv = rb.column(value_col)
-            vv_offs = np.asarray(vv.offsets)
-            d_sizes = np.diff(vv_offs)
-            d = int(d_sizes[0]) if len(d_sizes) else 0
-            if len(d_sizes) and not np.all(d_sizes == d):
-                raise ValueError("ragged member vectors in bag assembly")
-            flat = np.asarray(vv.values, dtype=np.float32)
-            return flat[int(vv_offs[0]) : int(vv_offs[0]) + n * d].reshape(n, d)
-
-        yield from _bag_walk(
-            batches, mat_of, method, weights, bag_cap, bag_size, bag_seed
-        )
-
-    return part.mapInArrow(run, schema=BAG_SCHEMA)
-
-
-def _bag_weights(method: str, encoder: str, schema: str, ckpt: str | None) -> dict:
-    """Model weights for the att/avg bag kernels (att_diag is ones for
-    the BERT encoders, bag_attention.py:29)."""
-    if encoder in ("bert", "bert_entity"):
-        from ..functions.bert_kernels import default_bert_model
-
-        _, weights = default_bert_model(
-            entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-        )
-        if "att_diag" not in weights:
-            weights = dict(weights)
-            weights["att_diag"] = np.ones(weights["fc_w"].shape[1], np.float32)
-    else:
-        from ..functions.weights import default_model
-
-        _, weights = default_model(
-            pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-        )
-    return weights
-
-
-def _bag_walk(batches, mat_of, method, weights, bag_cap, bag_size, bag_seed):
-    """Shared streaming walk over (h_id, t_id)-sorted record batches:
-    detect bag boundaries, assemble each bag's stable-ordered member
-    matrix (carrying at most one open bag across batch boundaries),
-    apply the cap/resize semantics, run the bag kernel, emit BAG_SCHEMA
-    record batches. `mat_of(rb)` supplies the (n_rows, d) float32 member
-    matrix aligned with the batch rows — read from a `rep`/`scores`
-    column (bag_scores_batched) or computed in place by the scoring
-    kernel (bag_scores_fused)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from .scoring import _list_f32
-
-    def bag_out(h_id, t_id, mat, n_members):
-        """Kernel over one COMPLETE bag's stable-ordered matrix."""
-        if bag_size > 0:
-            mat = mat[resize_indices(n_members, bag_size, h_id, t_id, bag_seed)]
-        if method == "one":
-            out = kernels.bag_one_eval(mat)
-        elif method == "att":
-            out = kernels.bag_attention_eval(mat, weights)
-        else:
-            out = kernels.bag_average_eval(mat, weights)
-        return out.astype(np.float32), len(mat)
-
-    # carry state for a bag spanning record-batch boundaries
-    cur_key: tuple | None = None
-    cur_parts: list[np.ndarray] = []
-    cur_n = 0  # true member count (cap path may drop rows from parts)
-
-    def finish():
-        nonlocal cur_key, cur_parts, cur_n
-        mat = (
-            np.concatenate(cur_parts, 0)
-            if len(cur_parts) != 1
-            else cur_parts[0]
-        )
-        scores, n_out = bag_out(cur_key[0], cur_key[1], mat, cur_n)
-        out = (cur_key[0], cur_key[1], n_out, scores)
-        cur_key, cur_parts, cur_n = None, [], 0
-        return out
-
-    for rb in batches:
-        n = rb.num_rows
-        if not n:
-            continue
-        mat_all = mat_of(rb)
-        ha, ta = rb.column("h_id"), rb.column("t_id")
-        if n > 1:
-            chg = pc.or_(
-                pc.not_equal(ha.slice(1), ha.slice(0, n - 1)),
-                pc.not_equal(ta.slice(1), ta.slice(0, n - 1)),
-            )
-            bounds = np.flatnonzero(
-                chg.to_numpy(zero_copy_only=False)
-            ) + 1
-        else:
-            bounds = np.empty(0, dtype=np.int64)
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [n]))
-        h_first = ha.take(pa.array(starts, type=pa.int64())).to_pylist()
-        t_first = ta.take(pa.array(starts, type=pa.int64())).to_pylist()
-        done: list[tuple] = []
-        for i in range(len(starts)):
-            lo, hi = int(starts[i]), int(ends[i])
-            key = (h_first[i], t_first[i])
-            if cur_key is not None and key != cur_key:
-                done.append(finish())
-            if cur_key is None:
-                cur_key = key
-            run_n = hi - lo
-            if bag_cap > 0 and bag_size == 0:
-                take = max(0, min(run_n, bag_cap - sum(
-                    p.shape[0] for p in cur_parts
-                )))
-            else:
-                take = run_n
-            if take:
-                cur_parts.append(mat_all[lo : lo + take])
-            cur_n += run_n
-        # every run except possibly the last is complete inside this
-        # batch — but a run only ENDS when the next key differs, so
-        # the final run stays open until the next batch (or EOF)
-        if done:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([x[0] for x in done], type=pa.string()),
-                    pa.array([x[1] for x in done], type=pa.string()),
-                    pa.array(
-                        np.asarray([x[2] for x in done], dtype=np.int32),
-                        type=pa.int32(),
-                    ),
-                    _list_f32(np.stack([x[3] for x in done])),
-                ],
-                names=["h_id", "t_id", "n_sentences", "scores"],
-            )
-    if cur_key is not None:
-        x = finish()
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([x[0]], type=pa.string()),
-                pa.array([x[1]], type=pa.string()),
-                pa.array(np.asarray([x[2]], dtype=np.int32), type=pa.int32()),
-                _list_f32(x[3][None, :]),
-            ],
-            names=["h_id", "t_id", "n_sentences", "scores"],
-        )
-
-
 def bag_scores_fused(
     instances: DataFrame,
     method: str = "att",
@@ -384,40 +87,45 @@ def bag_scores_fused(
     ckpt: str | None = None,
     micro_batch: int | None = None,
 ) -> DataFrame:
-    """att/avg bag aggregation with the SCORING FUSED INTO the bag
-    kernel (r7, guide §2.3 "shuffle keys and metadata instead of
-    payloads"): the bag exchange carries the ~200 B/row scoring inputs
-    (raw text+spans, or the packed tok_bin encode) instead of the
-    (H,)-dim rep — at the reference dims that is ~5x fewer shuffle
-    bytes and one fewer Arrow crossing of the rep matrix. Rows shuffle
-    by (h_id, t_id), external-sort by the stable member key, and ONE
-    mapInArrow pass scores each record batch (the same
-    _score_token_block every other path uses) and streams the rep rows
-    straight into the bag walk — the rep never exists outside Python.
+    """Per-bag per-relation score vector, with the scoring FUSED INTO
+    the bag kernel: (h_id, t_id, n_sentences, scores).
 
-    Scores move ~1e-7 vs the two-pass bag_scores_batched route (Arrow
-    micro-batch composition differs — the same documented variance the
-    encoded-vs-fused split already exhibits); member selection, stable
-    ordering, cap/resize semantics and n_sentences are IDENTICAL
-    (shared _bag_walk). CNN/PCNN only; BERT bag modes keep the two-pass
-    route (their encode is model-specific and the transformer dwarfs
-    the shuffle).
+    method: 'att' (bag_attention.py:136-164), 'avg'
+    (bag_average.py:117-131) or 'one' (bag_one.py:140-148). encoder:
+    'cnn', 'pcnn', 'bert' or 'bert_entity'.
 
-    Input flavors (detected by column): an encode_instances() table
-    (tok_bin/h_start/t_start/n_tok) or raw instance rows
-    (text/h_begin/h_end/t_begin/t_end).
+    The bag exchange carries the ~200 B/row scoring inputs instead of
+    the (H,)-dim rep (guide §2.3 "shuffle keys and metadata instead of
+    payloads"). Rows shuffle by (h_id, t_id), external-sort by the
+    stable member key, and ONE mapInArrow pass scores each record batch
+    (operators.scoring._batch_scorer, the scorer every scoring path
+    uses) and streams the rep rows (att/avg) or softmax scores (one)
+    straight into the bag walk — neither exists outside Python.
+
+    Input flavours (detected by column): an encode_instances() table
+    (tok_bin/h_start/t_start/n_tok; CNN/PCNN only) or raw instance rows
+    (text/h_begin/h_end/t_begin/t_end; every encoder).
+
+    bag_cap > 0 keeps the first bag_cap members of the stable order and
+    never scores the rest. bag_size > 0 enables the reference's
+    fixed-size resize (data_loader.py:185-190): sample-down without
+    replacement / pad-up with replacement, seeded per bag key (see
+    resize_bag); it supersedes bag_cap.
+
+    Bag scores may move ~1e-7 with Arrow batch composition (batch size,
+    partitioning, the cap): fused-GEMM float32 results depend on which
+    rows share a micro-batch. Member selection, stable ordering and
+    n_sentences do not move. For parity debugging, compare against the
+    per-group reference `bag_scores` in tests/oracle/bag_route.py.
     """
-    if method not in ("att", "avg"):
-        raise ValueError(
-            f"bag_scores_fused supports att/avg, got {method!r} "
-            "('one' decomposes natively — see bag_one_native)"
-        )
-    if encoder not in ("cnn", "pcnn"):
-        raise ValueError("bag_scores_fused supports the cnn/pcnn encoders only")
+    if method not in ("att", "avg", "one"):
+        raise ValueError(f"unknown bag method {method!r}")
     from .. import config
 
-    mb = micro_batch if micro_batch is not None else config.EVAL_MICRO_BATCH
     encoded_input = "tok_bin" in instances.columns
+    if encoded_input and encoder not in ("cnn", "pcnn"):
+        raise ValueError("encoded bag input supports the cnn/pcnn encoders only")
+    mb = micro_batch if micro_batch is not None else config.EVAL_MICRO_BATCH
     sort_cols = [c for c in _SORT_COLS if c in instances.columns]
     score_cols = (
         ["tok_bin", "h_start", "t_start", "n_tok"]
@@ -432,171 +140,125 @@ def bag_scores_fused(
         .repartition("h_id", "t_id")
         .sortWithinPartitions("h_id", "t_id", *sort_cols)
     )
+    with_rep = method != "one"
 
     def run(batches):
-        from ..functions.weights import default_model
-        from .scoring import _int_col, _score_token_block, _tokens_from_binary
+        from .scoring import _batch_scorer
 
         # one model: the scoring kernel and the bag kernel share it
-        # (encoder is cnn/pcnn here, so _bag_weights == default_model)
-        vocab, weights = default_model(
-            pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
+        weights, score = _batch_scorer(
+            encoder, schema, ckpt, with_rep, micro_batch=mb,
+            encoded=encoded_input,
         )
-        _w = weights
-        L = int(_w["max_length"])
-
-        if encoded_input:
-
-            def mat_of(rb):
-                tok_col = rb.column("tok_bin")
-                item = len(tok_col[0].as_py()) if rb.num_rows else L * 4
-                if item != L * 4:
-                    raise ValueError(
-                        f"encoded table was built at max_length L={item // 4}, "
-                        f"but the checkpoint/schema expects L={L} — re-run "
-                        "encode_instances against the same model configuration"
-                    )
-                token = _tokens_from_binary(tok_col, L).astype(np.int64)
-                _, rep = _score_token_block(
-                    token,
-                    _int_col(rb, "h_start").astype(np.int64),
-                    _int_col(rb, "t_start").astype(np.int64),
-                    _int_col(rb, "n_tok").astype(np.int64),
-                    _w, (encoder == "pcnn"), "softmax", mb, True,
-                )
-                return rep
-
-        else:
-            from ..functions.encoding import encode_tokens_batch
-
-            pad_id = vocab["[PAD]"]
-            unk_id = vocab["[UNK]"]
-
-            def mat_of(rb):
-                enc = encode_tokens_batch(
-                    rb.column("text").to_pylist(),
-                    _int_col(rb, "h_begin"),
-                    _int_col(rb, "h_end"),
-                    _int_col(rb, "t_begin"),
-                    _int_col(rb, "t_end"),
-                    vocab, L, pad_id, unk_id,
-                )
-                _, rep = _score_token_block(
-                    enc["token"], enc["p1_start"], enc["p2_start"],
-                    enc["n_real"], _w, (encoder == "pcnn"), "softmax", mb, True,
-                )
-                return rep
-
+        pick = 1 if with_rep else 0
         yield from _bag_walk(
-            batches, mat_of, method, weights, bag_cap, bag_size, bag_seed
+            batches, lambda rb: score(rb)[pick], method, weights,
+            bag_cap, bag_size, bag_seed,
         )
 
     return part.mapInArrow(run, schema=BAG_SCHEMA)
 
 
-def bag_one_native(scored: DataFrame) -> DataFrame:
-    """`one` aggregator as native Spark (A6): posexplode the per-sentence
-    softmax scores and take per-relation max. Fully associative ->
-    map-side partial aggregation, no Python in the agg path.
-    Returns (h_id, t_id, rel_id, score).
-    """
-    per_rel = scored.select(
-        "h_id", "t_id", F.posexplode("scores").alias("rel_id", "score")
-    )
-    return per_rel.groupBy("h_id", "t_id", "rel_id").agg(
-        F.max("score").alias("score")
-    )
+def _bag_walk(batches, score, method, weights, bag_cap, bag_size, bag_seed):
+    """Streaming walk over (h_id, t_id)-sorted record batches: find the
+    bag boundaries, score the rows each bag keeps, assemble each bag's
+    stable-ordered member matrix (carrying at most one open bag across
+    batch boundaries), run the bag kernel, emit BAG_SCHEMA record
+    batches. `score(rb)` returns the (n_rows, d) float32 member matrix
+    of a batch.
 
+    The cap acts before scoring: a member past the first bag_cap of its
+    bag never reaches the encoder. The bag_size resize scores every
+    member, because pad-with-replacement samples from all of them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-def bag_average_native(
-    scored: DataFrame,
-    schema: str = "reduced",
-    encoder: str = "cnn",
-    ckpt: str | None = None,
-) -> DataFrame:
-    """`avg` aggregator with a NATIVE two-phase mean (A5): per-dimension
-    `avg(rep[i])` aggregates decompose into map-side partials exactly
-    like `one`'s max — no Python function runs per group, no rep vector
-    rides the shuffle unaggregated. The tiny fc+softmax epilogue is one
-    Arrow pass over (n_bags, H) rows.
+    from .scoring import _list_f32
 
-    Numeric delta vs bag_average_eval (documented): Spark's avg
-    accumulates in double and rounds to float32 once, where the
-    reference means in float32 (bag_average.py:124) — agreement is
-    ~1e-7, inside the golden tolerance. Bag size caps/resizes are NOT
-    applied here (this is the bag_size=0 all-sentences eval path).
-    Returns (h_id, t_id, n_sentences, scores).
-    """
-    import numpy as _np
+    capped = bag_cap > 0 and bag_size == 0
+    # carry state for a bag spanning record-batch boundaries
+    cur_key: tuple | None = None
+    cur_parts: list[np.ndarray] = []
+    cur_kept = 0  # member rows scored so far
+    cur_n = 0  # true member count (the cap drops rows past bag_cap)
 
-    # rep dimension from the weight config — probing the data
-    # (`scored.select("rep").first()`) would execute one partition of the
-    # expensive upstream scoring lineage just to measure H, and crash on
-    # an empty input (ADVICE r2)
-    if encoder in ("bert", "bert_entity"):
-        from ..functions.bert_kernels import default_bert_model
-
-        _, _w = default_bert_model(
-            entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-        )
-    else:
-        from ..functions.weights import default_model
-
-        _, _w = default_model(pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt)
-    n_dim = int(_w["fc_w"].shape[1])
-    means = scored.groupBy("h_id", "t_id").agg(
-        F.count(F.lit(1)).cast("int").alias("n_sentences"),
-        F.array(
-            *[F.avg(F.col("rep")[i]).cast("float") for i in range(n_dim)]
-        ).alias("bag_rep"),
-    )
-
-    def classify(batches):
-        import pyarrow as pa
-
-        from ..functions import kernels
-        from .scoring import _list_f32
-
-        if encoder in ("bert", "bert_entity"):
-            from ..functions.bert_kernels import default_bert_model
-
-            _, weights = default_bert_model(
-                entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-            )
+    def finish():
+        nonlocal cur_key, cur_parts, cur_kept, cur_n
+        h_id, t_id = cur_key
+        mat = np.concatenate(cur_parts, 0) if len(cur_parts) != 1 else cur_parts[0]
+        if bag_size > 0:
+            mat = mat[resize_indices(cur_n, bag_size, h_id, t_id, bag_seed)]
+        if method == "one":
+            out = kernels.bag_one_eval(mat)
+        elif method == "att":
+            out = kernels.bag_attention_eval(mat, weights)
         else:
-            from ..functions.weights import default_model
+            out = kernels.bag_average_eval(mat, weights)
+        row = (h_id, t_id, len(mat), out.astype(np.float32))
+        cur_key, cur_parts, cur_kept, cur_n = None, [], 0, 0
+        return row
 
-            _, weights = default_model(
-                pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-            )
-        for rb in batches:
-            n = rb.num_rows
-            if not n:
-                continue
-            br = rb.column("bag_rep")
-            offs = _np.asarray(br.offsets)
-            if _np.all(_np.diff(offs) == n_dim):
-                # contiguous uniform lists: one reshape off the child
-                # buffer (offsets are global into the child, so slice
-                # from offs[0], not 0)
-                rep = _np.asarray(br.values, dtype=_np.float32)[
-                    offs[0] : offs[0] + n * n_dim
-                ].reshape(n, n_dim)
-            else:
-                rep = _np.asarray(br.to_pylist(), dtype=_np.float32)
-            logits = kernels.linear(rep, weights["fc_w"], weights["fc_b"])
-            probs = kernels.softmax(logits, axis=-1).astype(_np.float32)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    rb.column("h_id"),
-                    rb.column("t_id"),
-                    rb.column("n_sentences"),
-                    _list_f32(probs),
-                ],
-                names=["h_id", "t_id", "n_sentences", "scores"],
-            )
+    def emit(rows):
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([x[0] for x in rows], type=pa.string()),
+                pa.array([x[1] for x in rows], type=pa.string()),
+                pa.array(
+                    np.asarray([x[2] for x in rows], dtype=np.int32),
+                    type=pa.int32(),
+                ),
+                _list_f32(np.stack([x[3] for x in rows])),
+            ],
+            names=["h_id", "t_id", "n_sentences", "scores"],
+        )
 
-    return means.mapInArrow(classify, schema=BAG_SCHEMA)
+    for rb in batches:
+        n = rb.num_rows
+        if not n:
+            continue
+        ha, ta = rb.column("h_id"), rb.column("t_id")
+        if n > 1:
+            chg = pc.or_(
+                pc.not_equal(ha.slice(1), ha.slice(0, n - 1)),
+                pc.not_equal(ta.slice(1), ta.slice(0, n - 1)),
+            )
+            bounds = np.flatnonzero(chg.to_numpy(zero_copy_only=False)) + 1
+        else:
+            bounds = np.empty(0, dtype=np.int64)
+        starts = np.concatenate(([0], bounds))
+        sizes = np.diff(np.concatenate((starts, [n])))
+        first = pa.array(starts, type=pa.int64())
+        keys = list(zip(ha.take(first).to_pylist(), ta.take(first).to_pylist()))
+        # rows each run keeps: every run but the first opens a new bag;
+        # the first may continue the bag left open by the previous batch
+        takes = sizes
+        if capped:
+            room = np.full(len(starts), bag_cap)
+            if keys[0] == cur_key:
+                room[0] = bag_cap - cur_kept
+            takes = np.minimum(sizes, room)
+        kept_at = np.cumsum(takes) - takes
+        n_kept = int(takes.sum())
+        if n_kept == n:
+            mat = score(rb)
+        elif n_kept:
+            idx = np.arange(n_kept) + np.repeat(starts - kept_at, takes)
+            mat = score(rb.take(pa.array(idx)))
+        done: list[tuple] = []
+        for i, key in enumerate(keys):
+            if cur_key is not None and key != cur_key:
+                done.append(finish())
+            cur_key = key
+            if takes[i]:
+                cur_parts.append(mat[kept_at[i] : kept_at[i] + takes[i]])
+                cur_kept += int(takes[i])
+            cur_n += int(sizes[i])
+        # a run only ENDS when the next key differs, so the final run
+        # stays open until the next batch (or EOF)
+        if done:
+            yield emit(done)
+    if cur_key is not None:
+        yield emit([finish()])
 
 
 def explode_bag_scores(bags: DataFrame, id2rel: dict[int, str]) -> DataFrame:
@@ -616,31 +278,4 @@ def explode_bag_scores(bags: DataFrame, id2rel: dict[int, str]) -> DataFrame:
         per_rel.join(F.broadcast(rels), "rel_id")
         .filter(F.col("relation") != "NA")
         .select("h_id", "t_id", "relation", "score", "n_sentences")
-    )
-
-
-def bag_one_salted(scored: DataFrame, n_salts: int = 8) -> DataFrame:
-    """`one` with explicit hot-key salting (SURVEY.md §4 custom work #2):
-    phase 1 aggregates per (h_id, t_id, salt) where salt spreads a hot
-    entity pair over n_salts reducers, phase 2 merges the partials —
-    legal because per-relation max is associative/commutative
-    (bag_one.py:146 `instance_logit.max(dim=0)`).
-
-    With Spark's own map-side partial aggregation this is usually
-    redundant for `one`; it exists as the explicit two-phase pattern for
-    aggregations whose partials AREN'T auto-derived (and as the
-    documented skew strategy the north rule asks for). `att` cannot be
-    salted this way (softmax over the full bag does not decompose) —
-    its skew guard is the deterministic bag cap.
-    """
-    per_rel = scored.select(
-        "h_id", "t_id",
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salts)).alias("salt"),
-        F.posexplode("scores").alias("rel_id", "score"),
-    )
-    partial = per_rel.groupBy("h_id", "t_id", "salt", "rel_id").agg(
-        F.max("score").alias("score")
-    )
-    return partial.groupBy("h_id", "t_id", "rel_id").agg(
-        F.max("score").alias("score")
     )

@@ -239,6 +239,103 @@ def _score_bert_block(
     return pr, rep
 
 
+def _batch_scorer(
+    encoder: str,
+    schema: str,
+    ckpt: str | None,
+    with_rep: bool,
+    classifier: str = "softmax",
+    micro_batch: int = config.EVAL_MICRO_BATCH,
+    encoded: bool = False,
+):
+    """Executor-side scoring shared by score_instances, score_encoded
+    and bags.bag_scores_fused. Loads the model once and returns
+    (weights, score), where score(rb) -> (pr (n, N) float32,
+    rep (n, H) float32 | None) for one non-empty record batch.
+
+    encoded=True reads an encode_instances() batch (tok_bin, h_start,
+    t_start, n_tok; CNN/PCNN only); otherwise the raw text + h_begin/
+    h_end/t_begin/t_end spans for any of the four encoders. The BERT
+    weights carry the att_diag of ones the bag attention kernel reads
+    (bag_attention.py:29) when no checkpoint supplies one.
+    """
+    if encoder in ("bert", "bert_entity"):
+        from ..functions import bert_kernels
+        from ..functions.bert_encoding import bert_encode_batch
+
+        vocab, weights = bert_kernels.default_bert_model(
+            entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
+        )
+        if "att_diag" not in weights:
+            weights = dict(weights)
+            weights["att_diag"] = np.ones(weights["fc_w"].shape[1], np.float32)
+        rep_fn = (
+            bert_kernels.bert_entity_rep
+            if encoder == "bert_entity"
+            else bert_kernels.bert_cls_rep
+        )
+
+        def score(rb):
+            enc = bert_encode_batch(
+                rb.column("text").to_pylist(),
+                _int_col(rb, "h_begin"), _int_col(rb, "h_end"),
+                _int_col(rb, "t_begin"), _int_col(rb, "t_end"),
+                vocab, config.BERT_MAX_LENGTH,
+            )
+            return _score_bert_block(
+                enc["token"], enc["att_mask"], enc["pos1"], enc["pos2"],
+                weights, rep_fn, classifier, micro_batch, with_rep,
+            )
+
+        return weights, score
+
+    from ..functions.encoding import encode_tokens_batch
+    from ..functions.weights import default_model
+
+    vocab, weights = default_model(
+        pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
+    )
+    pcnn = encoder == "pcnn"
+    L = int(weights["max_length"])
+
+    def score(rb):
+        if encoded:
+            tok_col = rb.column("tok_bin")
+            item = len(tok_col[0].as_py())
+            if item != L * 4:
+                # fail with the real cause instead of an opaque
+                # frombuffer/reshape error deep in the decode
+                raise ValueError(
+                    f"encoded table was built at max_length L={item // 4}, "
+                    f"but the checkpoint/schema expects L={L} — re-run "
+                    "encode_instances against the same model configuration"
+                )
+            token = _tokens_from_binary(tok_col, L).astype(np.int64)
+            h_start = _int_col(rb, "h_start").astype(np.int64)
+            t_start = _int_col(rb, "t_start").astype(np.int64)
+            n_real = _int_col(rb, "n_tok").astype(np.int64)
+        else:
+            # tokenize the WHOLE record batch once (per-row string work,
+            # identical results under any batching), then the shared
+            # length-sorted GEMM block — the same code path as the
+            # encoded flavour, so aligned-batch parity is structural
+            enc = encode_tokens_batch(
+                rb.column("text").to_pylist(),
+                _int_col(rb, "h_begin"), _int_col(rb, "h_end"),
+                _int_col(rb, "t_begin"), _int_col(rb, "t_end"),
+                vocab, L, vocab["[PAD]"], vocab["[UNK]"],
+            )
+            token, h_start, t_start, n_real = (
+                enc["token"], enc["p1_start"], enc["p2_start"], enc["n_real"]
+            )
+        return _score_token_block(
+            token, h_start, t_start, n_real, weights, pcnn, classifier,
+            micro_batch, with_rep,
+        )
+
+    return weights, score
+
+
 def _emit_scored(rb, keep_names, pr, rep, with_scores: bool, with_rep: bool):
     """Output RecordBatch: kept input columns by reference + the
     prediction columns from flat numpy."""
@@ -257,6 +354,38 @@ def _emit_scored(rb, keep_names, pr, rep, with_scores: bool, with_rep: bool):
         cols.append(_list_f32(rep))
         names.append("rep")
     return pa.RecordBatch.from_arrays(cols, names=names)
+
+
+def _score_frame(
+    df: DataFrame, consumed, encoder: str, schema: str, ckpt,
+    with_rep: bool, with_scores: bool, classifier: str, micro_batch: int,
+    encoded: bool,
+) -> DataFrame:
+    """The mapInArrow stage behind score_instances and score_encoded:
+    the non-consumed input columns plus pred_rel_id, pred_score
+    [, scores] [, rep]."""
+    keep = [f for f in df.schema.fields if f.name not in consumed]
+    out_fields = list(keep) + [
+        T.StructField("pred_rel_id", T.IntegerType(), False),
+        T.StructField("pred_score", T.FloatType(), False),
+    ]
+    if with_scores:
+        out_fields.append(T.StructField("scores", T.ArrayType(T.FloatType()), False))
+    if with_rep:
+        out_fields.append(T.StructField("rep", T.ArrayType(T.FloatType()), False))
+    keep_names = [f.name for f in keep]
+
+    def run(batches: Iterator) -> Iterator:
+        _, score = _batch_scorer(
+            encoder, schema, ckpt, with_rep, classifier, micro_batch,
+            encoded=encoded,
+        )
+        for rb in batches:
+            if rb.num_rows:
+                pr, rep = score(rb)
+                yield _emit_scored(rb, keep_names, pr, rep, with_scores, with_rep)
+
+    return df.mapInArrow(run, schema=T.StructType(out_fields))
 
 
 def score_instances(
@@ -289,78 +418,10 @@ def score_instances(
     """
     if encoder is None:
         encoder = "pcnn" if pcnn else "cnn"
-    keep = [f for f in instances.schema.fields if f.name not in consumed]
-    out_fields = list(keep) + [
-        T.StructField("pred_rel_id", T.IntegerType(), False),
-        T.StructField("pred_score", T.FloatType(), False),
-    ]
-    if with_scores:
-        out_fields.append(T.StructField("scores", T.ArrayType(T.FloatType()), False))
-    if with_rep:
-        out_fields.append(T.StructField("rep", T.ArrayType(T.FloatType()), False))
-    out_schema = T.StructType(out_fields)
-    keep_names = [f.name for f in keep]
-
-    def run(batches: Iterator) -> Iterator:
-        from ..functions.encoding import encode_tokens_batch
-        from ..functions.weights import default_model
-
-        if encoder in ("bert", "bert_entity"):
-            from ..functions import bert_kernels
-            from ..functions.bert_encoding import bert_encode_batch
-
-            vocab, weights = bert_kernels.default_bert_model(
-                entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-            )
-            L = config.BERT_MAX_LENGTH
-            rep_fn = (
-                bert_kernels.bert_entity_rep
-                if encoder == "bert_entity"
-                else bert_kernels.bert_cls_rep
-            )
-
-            def score_batch(texts, hb, he, tb, te):
-                enc = bert_encode_batch(texts, hb, he, tb, te, vocab, L)
-                return _score_bert_block(
-                    enc["token"], enc["att_mask"], enc["pos1"], enc["pos2"],
-                    weights, rep_fn, classifier, micro_batch, with_rep,
-                )
-
-        else:
-            vocab, weights = default_model(
-                pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-            )
-            pad_id = vocab["[PAD]"]
-            unk_id = vocab["[UNK]"]
-            L = int(weights["max_length"])
-
-            def score_batch(texts, hb, he, tb, te):
-                # tokenize the WHOLE record batch once (per-row string
-                # work, identical results under any batching), then the
-                # shared length-sorted GEMM block (same code path as
-                # score_encoded -> aligned-batch parity is structural)
-                enc = encode_tokens_batch(
-                    texts, hb, he, tb, te, vocab, L, pad_id, unk_id
-                )
-                return _score_token_block(
-                    enc["token"], enc["p1_start"], enc["p2_start"],
-                    enc["n_real"], weights, (encoder == "pcnn"),
-                    classifier, micro_batch, with_rep,
-                )
-
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            texts = rb.column("text").to_pylist()
-            hb = _int_col(rb, "h_begin")
-            he = _int_col(rb, "h_end")
-            tb = _int_col(rb, "t_begin")
-            te = _int_col(rb, "t_end")
-            pr, rep = score_batch(texts, hb, he, tb, te)
-            yield _emit_scored(rb, keep_names, pr, rep, with_scores, with_rep)
-
-    return instances.mapInArrow(run, schema=out_schema)
+    return _score_frame(
+        instances, consumed, encoder, schema, ckpt, with_rep, with_scores,
+        classifier, micro_batch, encoded=False,
+    )
 
 
 def encode_instances(
@@ -470,51 +531,10 @@ def score_encoded(
             f"score_encoded supports cnn/pcnn, got {encoder!r} "
             "(the BERT path encodes inline — see encode_instances docstring)"
         )
-    enc_cols = ("tok_bin", "h_start", "t_start", "n_tok")
-    keep = [f for f in encoded.schema.fields if f.name not in enc_cols]
-    out_fields = list(keep) + [
-        T.StructField("pred_rel_id", T.IntegerType(), False),
-        T.StructField("pred_score", T.FloatType(), False),
-    ]
-    if with_scores:
-        out_fields.append(T.StructField("scores", T.ArrayType(T.FloatType()), False))
-    if with_rep:
-        out_fields.append(T.StructField("rep", T.ArrayType(T.FloatType()), False))
-    out_schema = T.StructType(out_fields)
-    keep_names = [f.name for f in keep]
-
-    def run(batches: Iterator) -> Iterator:
-        from ..functions.weights import default_model
-
-        vocab, weights = default_model(
-            pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-        )
-        L = int(weights["max_length"])
-        for rb in batches:
-            n = rb.num_rows
-            if n == 0:
-                continue
-            tok_col = rb.column("tok_bin")
-            item = len(tok_col[0].as_py()) if n else L * 4
-            if item != L * 4:
-                # ADVICE r6: fail with the real cause instead of an
-                # opaque frombuffer/reshape error deep in the decode
-                raise ValueError(
-                    f"encoded table was built at max_length L={item // 4}, "
-                    f"but the checkpoint/schema expects L={L} — re-run "
-                    "encode_instances against the same model configuration"
-                )
-            token = _tokens_from_binary(tok_col, L).astype(np.int64)
-            h_start = _int_col(rb, "h_start").astype(np.int64)
-            t_start = _int_col(rb, "t_start").astype(np.int64)
-            n_real = _int_col(rb, "n_tok").astype(np.int64)
-            pr, rep = _score_token_block(
-                token, h_start, t_start, n_real, weights,
-                (encoder == "pcnn"), classifier, micro_batch, with_rep,
-            )
-            yield _emit_scored(rb, keep_names, pr, rep, with_scores, with_rep)
-
-    return encoded.mapInArrow(run, schema=out_schema)
+    return _score_frame(
+        encoded, ("tok_bin", "h_start", "t_start", "n_tok"), encoder, schema,
+        ckpt, with_rep, with_scores, classifier, micro_batch, encoded=True,
+    )
 
 
 def sentence_predictions(scored: DataFrame, id2rel: dict[int, str]) -> DataFrame:

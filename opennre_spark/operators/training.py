@@ -316,10 +316,11 @@ def assemble_train_bags(
     encoded: DataFrame, bag_cap: int = 0
 ) -> DataFrame:
     """Bags keyed by the gold fact (h_id, t_id, label_id) with the
-    members' encoded arrays collected per bag. Same skew guard as the
-    eval path (bags.bag_scores_batched): with bag_cap > 0 a row_number
-    window over the stable member order prunes BEFORE collect_list, so
-    a hot pair cannot overflow the aggregation buffer."""
+    members' encoded arrays collected per bag. Same cap semantics as the
+    eval path (bags.bag_scores_fused keeps the first bag_cap members of
+    the stable order): with bag_cap > 0 a row_number window over the
+    stable member order prunes BEFORE collect_list, so a hot pair cannot
+    overflow the aggregation buffer."""
     sort_cols = [c for c in _SORT_COLS if c in encoded.columns]
     if bag_cap > 0 and sort_cols:
         from pyspark.sql import Window
@@ -600,7 +601,7 @@ def evaluate_bag_model(
     """BagRE.eval_model with IN-MEMORY weights (bag_re.py:154-181 +
     the per-epoch val call at 143-151): the weights are written to a
     temporary .npz checkpoint and routed through the PRODUCTION eval
-    path (score_instances -> bag_scores_batched -> explode ->
+    path (bag_scores_fused over the raw val instances -> explode ->
     metrics.bag_eval), so training-time validation exercises exactly
     the code a later inference run will.
 
@@ -617,9 +618,8 @@ def evaluate_bag_model(
 
     from .. import relations
     from ..functions.weights import save_weights_npz
-    from .bags import bag_scores_batched, explode_bag_scores
+    from .bags import bag_scores_fused, explode_bag_scores
     from .metrics import bag_eval
-    from .scoring import score_instances
 
     rel2id = relations.rel2id_for(schema)
     id2rel = {v: k for k, v in rel2id.items()}
@@ -629,16 +629,8 @@ def evaluate_bag_model(
     os.close(fd)
     try:
         save_weights_npz(weights, path, rel2id=rel2id)
-        scored = score_instances(
-            val_instances,
-            with_rep=(method != "one"),
-            with_scores=(method == "one"),
-            schema=schema,
-            encoder=encoder,
-            ckpt=path,
-        )
-        bags = bag_scores_batched(
-            scored, method=method, bag_cap=bag_cap, bag_size=bag_size,
+        bags = bag_scores_fused(
+            val_instances, method=method, bag_cap=bag_cap, bag_size=bag_size,
             schema=schema, encoder=encoder, ckpt=path,
         )
         preds = explode_bag_scores(bags, id2rel).select(

@@ -4,8 +4,9 @@ mentions -> candidate pairs -> batched relation scoring -> triples.
 Spark shape (SURVEY.md §3.1/3.2):
   sentence mode: one shuffle (candidate self-join) + one aggregation
   shuffle for triple dedup; everything else narrow.
-  bag modes: adds the groupBy(h_id, t_id) bag shuffle — the skew point,
-  guarded by the deterministic bag cap (operators/bags.py) and AQE.
+  bag modes: the (h_id, t_id) bag exchange replaces the scoring
+  repartition — the skew point, guarded by the deterministic bag cap
+  (operators/bags.py) and AQE.
 """
 
 from __future__ import annotations
@@ -14,11 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import config, relations
-from .operators.bags import (
-    bag_scores_batched,
-    bag_scores_fused,
-    explode_bag_scores,
-)
+from .operators.bags import bag_scores_fused, explode_bag_scores
 from .operators.candidates import candidate_pairs
 from .operators.mentions import detect_mentions
 from .operators.scoring import encode_instances, score_encoded, score_instances
@@ -86,7 +83,6 @@ def extract_triples(
     bag_cap: int = 0,
     bag_size: int = 0,
     pcnn: bool = False,
-    dedup_scoring: bool = False,
     schema: str = "reduced",
     encoder: str | None = None,
     ckpt: str | None = None,
@@ -96,7 +92,8 @@ def extract_triples(
 
     mode: 'sentence' (argmax per instance, SoftmaxNN.infer semantics,
     softmax_nn.py:35-39) or 'att'/'avg'/'one' (bag-level distant
-    supervision, BagRE.eval_model semantics, bag_re.py:154-181).
+    supervision, BagRE.eval_model semantics, bag_re.py:154-181), which
+    run through bags.bag_scores_fused for every encoder.
     bag_size > 0 switches bag modes to the reference's fixed-size
     resize path (A2, data_loader.py:185-190 — see bags.resize_bag);
     bag_cap is the bag_size=0 deterministic skew guard.
@@ -108,37 +105,28 @@ def extract_triples(
     encoded: a persisted encode_candidates() result for multi-query
     workloads over one corpus — skips the mention scan, candidate join
     and tokenize (CNN/PCNN only). Per-row math is bit-identical
-    (score_encoded); end-to-end scores can move ~1e-7 because the two
-    plans compose Arrow micro-batches differently and fused-GEMM float32
-    results depend on batch composition — the same (documented) variance
-    the default path already shows across cluster sizes. Mutually
-    exclusive with dedup_scoring.
+    (score_encoded).
+
+    Scores may move ~1e-7 with Arrow batch composition: fused-GEMM
+    float32 results depend on which rows share a micro-batch, and the
+    encoded/raw plans, cluster sizes and the bag cap all compose
+    batches differently, so a threshold-adjacent triple can flip. For
+    parity debugging of bag modes, compare bags.bag_scores_fused with
+    the per-group reference `bag_scores` in tests/oracle/bag_route.py.
     """
     spark = transcripts.sparkSession
     if encoder is None:
         encoder = "pcnn" if pcnn else "cnn"
     rel2id = relations.rel2id_for(schema)
     id2rel = {v: k for k, v in rel2id.items()}
-    # r7: att/avg bag modes fuse the scoring INTO the bag kernel (the
-    # bag exchange then carries ~200 B scoring inputs instead of the
-    # (H,)-dim rep — see bag_scores_fused). dedup_scoring keeps the
-    # two-pass route (its whole point is scoring distinct rows once,
-    # pre-shuffle); BERT keeps it too (model-specific encode).
-    fused_bags = (
-        mode in ("att", "avg")
-        and encoder in ("cnn", "pcnn")
-        and not dedup_scoring
-    )
 
     if encoded is not None:
-        if dedup_scoring:
-            raise ValueError("encoded= and dedup_scoring are mutually exclusive")
         if encoder not in ("cnn", "pcnn"):
             raise ValueError("encoded= supports the cnn/pcnn encoders only")
         if window_turns != config.PAIR_WINDOW_TURNS:
-            # ADVICE r6: the candidate window was fixed when the encoded
-            # table was built — a non-default window_turns here would be
-            # silently ignored, yielding a wrong candidate set
+            # the candidate window was fixed when the encoded table was
+            # built — a non-default window_turns here would be silently
+            # ignored, yielding a wrong candidate set
             raise ValueError(
                 "window_turns has no effect with encoded=: the candidate "
                 "window was fixed at encode_candidates time — pass "
@@ -146,77 +134,42 @@ def extract_triples(
             )
         # Column hygiene on the pre-encoded table: sentence mode needs
         # only the pair ids; bag modes add the stable-ordering key.
-        enc_cols = ["h_id", "t_id", "tok_bin", "h_start", "t_start", "n_tok"]
+        cols = ["h_id", "t_id", "tok_bin", "h_start", "t_start", "n_tok"]
         if mode != "sentence":
-            enc_cols += ["conv_id", "turn_idx", "pair_turn_idx", "h_begin", "t_begin"]
-        pruned = encoded.select(*enc_cols)
-
-        def scored_with(**kw):
-            return score_encoded(
-                pruned, schema=schema, encoder=encoder, ckpt=ckpt, **kw
-            )
-
+            cols += ["conv_id", "turn_idx", "pair_turn_idx", "h_begin", "t_begin"]
+        instances = encoded.select(*cols)
     else:
         mentions = detect_mentions(transcripts, relations.gazetteer())
         # Scoring is CPU-bound Python (numpy kernels), ~40us/row but only
         # ~200 bytes/row: AQE's byte-based partition coalescing would fuse
         # it into a handful of post-join partitions and starve the
         # executors (measured 2.2x slowdown at local[32]). A round-robin
-        # repartition pins the scoring stage's parallelism to the cluster
-        # size; the shuffled payload (instance text) is tiny next to the
-        # scoring cost. r7: the repartition sits BEFORE the direction
-        # explode (candidate_pairs(repartition=...)) so direction twins
-        # stay adjacent for the encode kernel's tokenize memo.
+        # repartition pins the sentence scoring stage's parallelism to
+        # the cluster size; it sits BEFORE the direction explode
+        # (candidate_pairs(repartition=...)) so direction twins stay
+        # adjacent for the encode kernel's tokenize memo. Bag modes skip
+        # it: the bag key exchange immediately follows and pins
+        # parallelism itself — two back-to-back exchanges would shuffle
+        # twice.
+        n_score_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+        instances = candidate_pairs(
+            mentions, window_turns=window_turns,
+            repartition=n_score_parts if mode == "sentence" else None,
+        )
         # Column hygiene before the Python boundary: sentence mode only
         # needs the pair ids downstream; bag modes additionally need the
         # stable-ordering key (conv, turns, spans). Everything else
         # (names, end offsets) dies here instead of riding two Arrow
         # crossings.
-        n_score_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-        # fused bag modes skip the round-robin scoring repartition: the
-        # bag key exchange immediately follows and pins parallelism
-        # itself — two back-to-back exchanges would shuffle twice
-        instances = candidate_pairs(
-            mentions, window_turns=window_turns,
-            repartition=None if (dedup_scoring or fused_bags) else n_score_parts,
-        )
-        scoring_cols = ["text", "h_begin", "h_end", "t_begin", "t_end", "h_id", "t_id"]
+        cols = ["text", "h_begin", "h_end", "t_begin", "t_end", "h_id", "t_id"]
         if mode != "sentence":
-            scoring_cols += ["conv_id", "turn_idx", "pair_turn_idx"]
-        instances = instances.select(*scoring_cols)
-
-        def scored_with(**kw):
-            """Score each DISTINCT (text, spans) once and join results back
-            (dedup_scoring): the kernel is a pure function of its inputs, so
-            identical instances (boilerplate turns, repeated tool output)
-            pay the Python cost once. Exact by construction. OFF by default:
-            it adds a dropDuplicates shuffle + a join, which only pays when
-            the duplicate ratio is high (measured: 1.3x on the synthetic
-            corpus -> the join costs more than the scoring it saves; flip on
-            for corpora with heavy boilerplate)."""
-            if not dedup_scoring:
-                # already repartitioned pre-explode (see above)
-                return score_instances(
-                    instances, schema=schema, encoder=encoder, ckpt=ckpt, **kw,
-                )
-            key = ["text", "h_begin", "h_end", "t_begin", "t_end"]
-            uniq = (
-                instances.select(*key)
-                .dropDuplicates(key)
-                .repartition(n_score_parts)
-            )
-            # the unique side keeps the full natural key for the join-back
-            scored_u = score_instances(
-                uniq, schema=schema, encoder=encoder, ckpt=ckpt,
-                consumed=("h_name", "t_name"), **kw,
-            )
-            return instances.join(scored_u, key, "inner")
-
-    neg_id = na_rel_id(rel2id)
+            cols += ["conv_id", "turn_idx", "pair_turn_idx"]
+        instances = instances.select(*cols)
 
     if mode == "sentence":
-        scored = scored_with(with_rep=False)
-        preds = scored
+        score = score_encoded if encoded is not None else score_instances
+        preds = score(instances, schema=schema, encoder=encoder, ckpt=ckpt)
+        neg_id = na_rel_id(rel2id)
         if neg_id is not None:
             preds = preds.filter(F.col("pred_rel_id") != F.lit(neg_id))
         rels = _relation_dim(spark, id2rel)
@@ -233,63 +186,13 @@ def extract_triples(
             )
         )
 
-    if fused_bags:
-        bag_in = pruned if encoded is not None else instances
-        bags = bag_scores_fused(
-            bag_in, method=mode, bag_cap=bag_cap, bag_size=bag_size,
-            encoder=encoder, schema=schema, ckpt=ckpt,
-        )
-        per_rel = explode_bag_scores(bags, id2rel)
-        return (
-            per_rel.filter(F.col("score") >= F.lit(threshold))
-            .select(
-                F.col("h_id").alias("subj"),
-                F.col("relation").alias("pred"),
-                F.col("t_id").alias("obj"),
-                "score",
-                F.col("n_sentences").alias("n_support"),
-            )
-        )
-
-    scored = scored_with(
-        with_rep=(mode != "one"),
-        with_scores=(mode == "one"),
+    bags = bag_scores_fused(
+        instances, method=mode, bag_cap=bag_cap, bag_size=bag_size,
+        encoder=encoder, schema=schema, ckpt=ckpt,
     )
-    if mode == "one" and bag_cap == 0 and bag_size == 0:
-        # fully native path (A6): per-relation max AND the bag size in
-        # ONE partial-aggregated pass — max/count are associative, so
-        # Catalyst plans map-side combine before the entpair shuffle and
-        # no Python runs in the aggregation at all. Exactly equal to the
-        # applyInPandas variant (max is max); that variant remains for
-        # the cap/resize semantics, which need whole-bag member lists.
-        rels = spark.createDataFrame(
-            [(i, r) for i, r in sorted(id2rel.items())],
-            "rel_id int, relation string",
-        )
-        per_rel_rows = scored.select(
-            "h_id", "t_id", F.posexplode("scores").alias("rel_id", "score")
-        )
-        agged = per_rel_rows.groupBy("h_id", "t_id", "rel_id").agg(
-            F.max("score").alias("score"),
-            F.count(F.lit(1)).cast("int").alias("n_sentences"),
-        )
-        per_rel = (
-            agged.join(F.broadcast(rels), "rel_id")
-            .filter(F.col("relation") != "NA")
-            .select("h_id", "t_id", "relation", "score", "n_sentences")
-        )
-    else:
-        # batched bag aggregation: JVM-side collect_list assembly + one
-        # mapInPandas pass (bitwise-identical to the per-group
-        # applyInPandas route, measured 2.0x faster on the att path —
-        # per-group pandas call overhead rivals the attention math)
-        bags = bag_scores_batched(
-            scored, method=mode, bag_cap=bag_cap, bag_size=bag_size,
-            encoder=encoder, schema=schema, ckpt=ckpt,
-        )
-        per_rel = explode_bag_scores(bags, id2rel)
     return (
-        per_rel.filter(F.col("score") >= F.lit(threshold))
+        explode_bag_scores(bags, id2rel)
+        .filter(F.col("score") >= F.lit(threshold))
         .select(
             F.col("h_id").alias("subj"),
             F.col("relation").alias("pred"),

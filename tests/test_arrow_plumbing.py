@@ -12,7 +12,9 @@ that end-to-end runs exercise only implicitly:
 - the zero-copy uniform-item fast path and its defensive fallback
   agree;
 - resize_indices (the Arrow bag path's RNG half) selects exactly the
-  rows resize_bag (the pandas half) keeps, for every n/bag_size shape.
+  rows resize_bag (the pandas half) keeps, for every n/bag_size shape;
+- the bag walk scores only the rows the cap keeps, and assembles the
+  same bags under every record-batch split.
 """
 
 from __future__ import annotations
@@ -22,7 +24,8 @@ import pandas as pd
 import pyarrow as pa
 import pytest
 
-from opennre_spark.operators.bags import resize_bag, resize_indices
+from opennre_spark.functions import kernels
+from opennre_spark.operators.bags import _bag_walk, resize_bag, resize_indices
 from opennre_spark.operators.scoring import (
     _binary_from_block,
     _list_f32,
@@ -96,3 +99,52 @@ def test_resize_indices_matches_resize_bag(n, bag_size):
     via_pdf = resize_bag(pdf, bag_size, "P001", "O042", seed=42)["v"].to_numpy()
     via_idx = np.arange(n)[resize_indices(n, bag_size, "P001", "O042", seed=42)]
     np.testing.assert_array_equal(via_pdf, via_idx)
+
+
+def test_bag_walk_scores_only_kept_rows():
+    """_bag_walk over (h_id, t_id)-sorted batches of every size equals a
+    whole-bag loop for the cap and resize semantics, and hands the
+    scorer each kept row exactly once: rows past bag_cap are never
+    scored, the bag_size resize scores every member."""
+    sizes = [1, 7, 3, 12, 2, 5, 9, 1]
+    keys = [(f"h{i}", "t0") for i in range(len(sizes))]
+    h = [k[0] for k, n in zip(keys, sizes) for _ in range(n)]
+    n_rows = len(h)
+    vals = np.random.default_rng(0).random((n_rows, 4)).astype(np.float32)
+
+    def batches(bs):
+        for lo in range(0, n_rows, bs):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(h[lo : lo + bs]), pa.array(["t0"] * len(h[lo : lo + bs])),
+                 pa.array(np.arange(lo, min(lo + bs, n_rows)))],
+                names=["h_id", "t_id", "rid"],
+            )
+
+    for bs in (1, 3, 4, 5, 100):
+        for cap, size in ((0, 0), (1, 0), (5, 0), (5, 4)):
+            scored = []
+
+            def score(rb):
+                ids = rb.column("rid").to_numpy()
+                scored.extend(ids.tolist())
+                return vals[ids]
+
+            got = {}
+            for rb in _bag_walk(batches(bs), score, "one", None, cap, size, 42):
+                for k, n, s in zip(rb.column("h_id").to_pylist(),
+                                   rb.column("n_sentences").to_pylist(),
+                                   rb.column("scores").to_pylist()):
+                    got[k] = (n, s)
+            lo = 0
+            for (k, _), n in zip(keys, sizes):
+                mat = vals[lo : lo + n]
+                lo += n
+                if size:
+                    mat = mat[resize_indices(n, size, k, "t0", 42)]
+                elif cap:
+                    mat = mat[:cap]
+                assert got[k][0] == len(mat), (bs, cap, size, k)
+                np.testing.assert_array_equal(got[k][1], kernels.bag_one_eval(mat))
+            kept = sum(min(n, cap) if cap and not size else n for n in sizes)
+            assert sorted(scored) == sorted(set(scored)), (bs, cap, size)
+            assert len(scored) == kept, (bs, cap, size)

@@ -499,8 +499,8 @@ def test_bert_bag_gradcheck_fd_with_internal_dropout():
 def test_bert_bag_val_and_ckpt_roundtrip(spark, tmp_path):
     """The BERT bag lifecycle end to end: train_bag_attention
     (encoder='bert', adamw) with per-epoch AUC validation through the
-    PRODUCTION bag eval path (scoring + bag_scores_batched with BERT
-    kernels, att_diag included), best-ckpt save in the HF-dotted S4
+    PRODUCTION bag eval path (bag_scores_fused with BERT kernels,
+    att_diag included), best-ckpt save in the HF-dotted S4
     format, reload, re-evaluate to exactly the recorded best — the
     train_bag_bert.py lifecycle (bag_re.py:143-151)."""
     from tests.test_training import _labeled_instances, _val_facts_from

@@ -1,13 +1,13 @@
 """End-to-end Spark pipeline tests: determinism, parity vs the oracle
 (the P/R >= 0.95 gate — we assert exact decision parity, P/R = 1.0),
-and bag aggregation correctness through the applyInPandas path.
+and bag aggregation correctness through the fused bag route.
 """
 
 import numpy as np
 import pytest
 
 from opennre_spark import relations
-from opennre_spark.operators.bags import bag_one_native, bag_scores
+from opennre_spark.operators.bags import bag_scores_fused
 from opennre_spark.operators.candidates import candidate_pairs
 from opennre_spark.operators.mentions import detect_mentions
 from opennre_spark.operators.scoring import score_instances
@@ -91,19 +91,16 @@ def test_extract_triples_sentence_mode(spark, transcripts):
 
 
 def test_bag_att_parity_through_spark(spark, transcripts):
-    """applyInPandas bag attention == oracle on the same stable-ordered
-    reps (A1 stable order + A4 math)."""
+    """Fused bag attention == oracle on the same stable-ordered reps
+    (A1 stable order + A4 math)."""
     mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_rep=True).cache()
+    instances = candidate_pairs(mentions).cache()
     bag_rows = {
         (r.h_id, r.t_id): np.array(r.scores, dtype=np.float32)
-        for r in bag_scores(scored, method="att").collect()
+        for r in bag_scores_fused(instances, method="att").collect()
     }
     # rebuild bags driver-side with the same stable ordering
-    import pandas as pd
-
-    pdf = scored.select(
+    pdf = score_instances(instances, with_rep=True).select(
         "h_id", "t_id", "conv_id", "turn_idx", "pair_turn_idx",
         "h_begin", "t_begin", "rep",
     ).toPandas()
@@ -121,22 +118,7 @@ def test_bag_att_parity_through_spark(spark, transcripts):
         np.testing.assert_allclose(bag_rows[(h, t)], want, atol=2e-6, rtol=1e-4)
         n_checked += 1
     assert n_checked > 10
-    scored.unpersist()
-
-
-def test_bag_one_native_equals_udf(spark, transcripts):
-    """A6 both ways: native Spark agg == applyInPandas kernel."""
-    mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_scores=True).cache()
-    native = {
-        (r.h_id, r.t_id, r.rel_id): r.score for r in bag_one_native(scored).collect()
-    }
-    viaudf = bag_scores(scored, method="one").collect()
-    for r in viaudf:
-        for rel_id, s in enumerate(r.scores):
-            assert abs(native[(r.h_id, r.t_id, rel_id)] - s) < 1e-7
-    scored.unpersist()
+    instances.unpersist()
 
 
 def test_extract_triples_bag_modes(spark, transcripts):
@@ -144,25 +126,6 @@ def test_extract_triples_bag_modes(spark, transcripts):
         triples = extract_triples(transcripts, mode=mode, threshold=0.15)
         rows = triples.limit(5).collect()
         assert len(rows) > 0, mode
-
-
-def test_bag_one_salted_equals_plain(spark, transcripts):
-    """Two-phase salted aggregation == single-phase (associativity)."""
-    from opennre_spark.operators.bags import bag_one_salted
-
-    mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_scores=True).cache()
-    plain = {
-        (r.h_id, r.t_id, r.rel_id): r.score
-        for r in bag_one_native(scored).collect()
-    }
-    salted = {
-        (r.h_id, r.t_id, r.rel_id): r.score
-        for r in bag_one_salted(scored, n_salts=4).collect()
-    }
-    assert plain == salted
-    scored.unpersist()
 
 
 def test_encoded_scoring_bitwise_parity(spark, transcripts):
@@ -198,6 +161,24 @@ def test_encoded_scoring_bitwise_parity(spark, transcripts):
     finally:
         instances.unpersist()
         encoded.unpersist()
+
+
+@pytest.mark.parametrize("route", ["score_encoded", "bag_scores_fused"])
+def test_encoded_width_mismatch_raises(spark, route):
+    """An encoded table built at another max_length fails with the real
+    cause, on both consumers of tok_bin."""
+    from opennre_spark.operators.scoring import score_encoded
+
+    L = 10  # the reduced model expects 40 token ids per row
+    row = ("h0", "t0", np.arange(L, dtype="<i4").tobytes(), 0, 2, 5)
+    enc = spark.createDataFrame(
+        [row],
+        "h_id string, t_id string, tok_bin binary, h_start int, "
+        "t_start int, n_tok int",
+    )
+    out = score_encoded(enc) if route == "score_encoded" else bag_scores_fused(enc)
+    with pytest.raises(Exception, match="built at max_length L=10"):
+        out.collect()
 
 
 def test_extract_triples_encoded_equals_default(spark, transcripts):

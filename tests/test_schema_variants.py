@@ -1,16 +1,17 @@
 """Schema variants + pipeline options: wiki80 (80 labels, no NA),
-dedup_scoring equivalence, deterministic bag cap (A2)."""
+deterministic bag cap and fixed-size resize (A2), and the fused bag
+route against the per-group oracle route."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from opennre_spark import relations
-from opennre_spark.operators.bags import bag_scores
+from opennre_spark.operators.bags import bag_scores_fused
 from opennre_spark.operators.candidates import candidate_pairs
 from opennre_spark.operators.mentions import detect_mentions
 from opennre_spark.operators.scoring import score_instances
 from opennre_spark.pipeline import extract_triples
 from opennre_spark.sources.transcripts import transcripts_df
+from tests.oracle.bag_route import bag_scores
 
 
 @pytest.fixture(scope="module")
@@ -60,27 +61,18 @@ def test_nyt10_bag_pipeline(spark, transcripts):
     assert {r.pred for r in triples} <= names - {"NA"}
 
 
-def test_dedup_scoring_equivalence(spark, transcripts):
-    """dedup_scoring=True must match to the reference parity tolerance:
-    the kernel is pure, but BLAS blocking varies with batch composition,
-    so scores agree to ~1e-6 (the golden tolerance), not bit-for-bit."""
-    base = {
-        (r.subj, r.pred, r.obj): (r.score, r.n_support)
-        for r in extract_triples(
-            transcripts, mode="sentence", dedup_scoring=False
-        ).collect()
-    }
-    dd = {
-        (r.subj, r.pred, r.obj): (r.score, r.n_support)
-        for r in extract_triples(
-            transcripts, mode="sentence", dedup_scoring=True
-        ).collect()
-    }
-    assert set(base) == set(dd)
-    for key, (score, n) in base.items():
-        s2, n2 = dd[key]
-        assert n == n2, key
-        assert abs(score - s2) < 1e-5, key
+def _bags(df):
+    return {(r.h_id, r.t_id): (r.n_sentences, r.scores) for r in df.collect()}
+
+
+def _assert_bags_close(got, want, tol, ctx):
+    """Same bag keys and member counts; scores within `tol`."""
+    assert got.keys() == want.keys(), ctx
+    for k, (n, s) in want.items():
+        n2, s2 = got[k]
+        assert n == n2, (ctx, k)
+        assert len(s) == len(s2), (ctx, k)
+        assert max(abs(a - b) for a, b in zip(s, s2)) < tol, (ctx, k)
 
 
 def test_bag_cap_deterministic(spark, transcripts):
@@ -88,24 +80,14 @@ def test_bag_cap_deterministic(spark, transcripts):
     deterministic (reference random.sample replaced, SURVEY.md §7) and
     idempotent across runs."""
     mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_scores=True).cache()
-    capped_a = {
-        (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-        for r in bag_scores(scored, method="one", bag_cap=3).collect()
-    }
-    capped_b = {
-        (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-        for r in bag_scores(scored, method="one", bag_cap=3).collect()
-    }
-    assert capped_a == capped_b
+    instances = candidate_pairs(mentions).cache()
+    capped_a = _bags(bag_scores_fused(instances, method="one", bag_cap=3))
+    capped_b = _bags(bag_scores_fused(instances, method="one", bag_cap=3))
+    _assert_bags_close(capped_b, capped_a, 1e-6, "rerun")
     assert all(n <= 3 for n, _ in capped_a.values())
-    full = {
-        (r.h_id, r.t_id): r.n_sentences
-        for r in bag_scores(scored, method="one").collect()
-    }
-    assert any(n > 3 for n in full.values()), "fixture must have a big bag"
-    scored.unpersist()
+    full = _bags(bag_scores_fused(instances, method="one"))
+    assert any(n > 3 for n, _ in full.values()), "fixture must have a big bag"
+    instances.unpersist()
 
 
 def test_bag_size_resize_parity(spark, transcripts):
@@ -122,9 +104,8 @@ def test_bag_size_resize_parity(spark, transcripts):
     from opennre_spark.functions import kernels
 
     mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_scores=True).cache()
-    rows = scored.collect()
+    instances = candidate_pairs(mentions).cache()
+    rows = score_instances(instances, with_scores=True).collect()
     groups = defaultdict(list)
     for r in rows:
         groups[(r.h_id, r.t_id)].append(r)
@@ -149,154 +130,11 @@ def test_bag_size_resize_parity(spark, transcripts):
                 [np.arange(n), rng.choice(n, size=K - n, replace=True)]
             )
         mat = np.asarray([mem[i].scores for i in idx], dtype=np.float32)
-        # float64 before rounding: Spark returns the float32 scores as
-        # Python floats, so both sides must round on the same dtype
-        want[(h, t)] = tuple(np.round(kernels.bag_one_eval(mat).astype(np.float64), 6))
-    got = {
-        (r.h_id, r.t_id): tuple(np.round(r.scores, 6))
-        for r in bag_scores(scored, method="one", bag_size=K).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        assert got[k] == want[k], k
+        want[(h, t)] = (K, kernels.bag_one_eval(mat))
+    got = _bags(bag_scores_fused(instances, method="one", bag_size=K))
     # every emitted bag is exactly bag_size after the resize
-    assert all(
-        r.n_sentences == K
-        for r in bag_scores(scored, method="one", bag_size=K).collect()
-    )
-    scored.unpersist()
-
-
-def test_bag_scores_batched_identical(spark, transcripts):
-    """The collect_list-batched bag aggregation must be BITWISE equal to
-    the per-group applyInPandas route for every method and for the
-    cap/resize variants (same stable sort, same kernel inputs)."""
-    from opennre_spark.operators.bags import bag_scores_batched
-
-    mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_rep=True, with_scores=True).cache()
-    for kw in (
-        {"method": "att"},
-        {"method": "avg"},
-        {"method": "one"},
-        {"method": "one", "bag_cap": 3},
-        {"method": "att", "bag_cap": 3},
-        {"method": "att", "bag_size": 4},
-    ):
-        a = {
-            (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-            for r in bag_scores(scored, **kw).collect()
-        }
-        b = {
-            (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-            for r in bag_scores_batched(scored, **kw).collect()
-        }
-        assert a == b, kw
-    scored.unpersist()
-
-
-def test_bag_plan_no_aggregation_buffer(spark):
-    """The r7 bag-assembly plan (VERDICT r2 #3 memory bound, restated):
-    bag members must never accumulate in a JVM aggregation buffer — the
-    r6 collect_list shape concentrated multi-GB of rep rows into a few
-    thousand bags' ObjectHashAggregate state. The plan is now exactly
-    ONE hash exchange on the bag key, a spill-safe external Sort by
-    (bag key + stable member key), and the streaming mapInArrow kernel:
-    no Aggregate, no Window, no collect_list anywhere. The bag_cap
-    memory bound got STRONGER: capped rows are dropped as they stream
-    in Python (bitwise-equal member selection to the r6 row_number
-    filter over the same ordering — test_bag_batched_matches_pandas
-    pins value equality)."""
-    import contextlib
-    import io
-
-    from opennre_spark.operators.bags import bag_scores_batched
-
-    rows = [
-        (f"h{i % 3}", "t0", f"c{j}", j, j, 0, 1, [0.1 * i % 1, 0.5, 0.2])
-        for i in range(3)
-        for j in range(6)
-    ]
-    scored = spark.createDataFrame(
-        rows,
-        "h_id string, t_id string, conv_id string, turn_idx int, "
-        "pair_turn_idx int, h_begin int, t_begin int, scores array<float>",
-    )
-    bags = bag_scores_batched(scored, method="one", bag_cap=2)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        bags.explain("formatted")
-    plan = buf.getvalue()
-    import re
-
-    # formatted output lists each node once in the tree and once in the
-    # numbered details — count the numbered nodes
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert "hashpartitioning(h_id" in plan, plan
-    assert "collect_list" not in plan, plan
-    assert "Aggregate" not in plan, plan
-
-    def node_num(pattern):
-        m = re.search(r"\((\d+)\) " + pattern, plan)
-        assert m, f"{pattern!r} not in plan:\n{plan}"
-        return int(m.group(1))
-
-    # leaf-first numbering: exchange -> sort -> python kernel
-    assert node_num(r"Exchange\n") < node_num(r"Sort\n") < node_num(
-        r"MapInArrow\n"
-    ), plan
-    # one exchange on the bag key total: the window's partitioning is
-    # reused by the groupBy
-    assert plan.count("hashpartitioning(h_id") == 1, plan
-    # and the capped output itself honors the bound
-    out = bags.collect()
-    assert out and all(r.n_sentences <= 2 for r in out)
-
-
-def test_bag_one_native_pipeline_equivalence(spark, transcripts):
-    """extract_triples(mode='one') now defaults to the fully native
-    max/count aggregation; it must equal the applyInPandas route exactly
-    (forced via an inert bag_cap larger than any bag — per-relation max
-    is max either way)."""
-    native = {
-        (r.subj, r.pred, r.obj): (r.score, r.n_support)
-        for r in extract_triples(transcripts, mode="one", threshold=0.15).collect()
-    }
-    pandas_route = {
-        (r.subj, r.pred, r.obj): (r.score, r.n_support)
-        for r in extract_triples(
-            transcripts, mode="one", threshold=0.15, bag_cap=10**6
-        ).collect()
-    }
-    assert native == pandas_route
-    assert native
-
-
-def test_bag_average_native_equivalence(spark, transcripts):
-    """A5 native two-phase mean == applyInPandas bag average to the
-    parity tolerance (Spark avg accumulates in double vs the kernel's
-    float32 mean — documented ~1e-7 delta, inside the 1e-6-per-step
-    golden budget)."""
-    from opennre_spark.operators.bags import bag_average_native
-
-    mentions = detect_mentions(transcripts, relations.gazetteer())
-    instances = candidate_pairs(mentions)
-    scored = score_instances(instances, with_rep=True).cache()
-    via_pandas = {
-        (r.h_id, r.t_id): (r.n_sentences, r.scores)
-        for r in bag_scores(scored, method="avg").collect()
-    }
-    via_native = {
-        (r.h_id, r.t_id): (r.n_sentences, r.scores)
-        for r in bag_average_native(scored).collect()
-    }
-    assert via_pandas.keys() == via_native.keys()
-    for k, (n, s) in via_pandas.items():
-        n2, s2 = via_native[k]
-        assert n == n2, k
-        assert max(abs(a - b) for a, b in zip(s, s2)) < 1e-5, k
-    scored.unpersist()
+    _assert_bags_close(got, want, 1e-6, "bag_size")
+    instances.unpersist()
 
 
 def test_pcnn_pipeline_parity(spark, transcripts):
@@ -325,114 +163,140 @@ def test_pcnn_pipeline_parity(spark, transcripts):
 
 
 def test_bag_scores_fused_matches_two_pass(spark, transcripts):
-    """r7 fused bag path (scoring inside the bag kernel, slim shuffle):
-    identical bag keys, member counts and selection vs the two-pass
-    score-then-aggregate route; scores within the 1e-6 parity bar (the
+    """The fused bag route (scoring inside the bag kernel, slim shuffle)
+    vs the two-pass oracle route (score_instances, then the per-group
+    applyInPandas bag_scores of tests/oracle): identical bag keys,
+    member counts and selection; scores within the 1e-6 parity bar (the
     two plans compose Arrow micro-batches differently — the same
-    documented float32 variance the encoded-vs-fused split shows).
-    Covers raw-instance AND pre-encoded input flavors, the cap and
-    resize variants, and the PCNN encoder."""
-    from opennre_spark.operators.bags import bag_scores_batched, bag_scores_fused
+    documented float32 variance the encoded-vs-fused split shows), 2e-5
+    for BERT. Covers raw-instance AND pre-encoded input flavours, every
+    method, the cap and resize variants, PCNN, and a small BERT case."""
     from opennre_spark.operators.scoring import encode_instances
 
     mentions = detect_mentions(transcripts, relations.gazetteer())
     instances = candidate_pairs(mentions).cache()
     encoded = encode_instances(instances).cache()
+    # a few dozen rows keep the transformer cheap
+    few = spark.createDataFrame(
+        instances.orderBy("h_id", "t_id", "conv_id", "turn_idx",
+                          "pair_turn_idx", "h_begin", "t_begin")
+        .limit(40).collect(),
+        instances.schema,
+    )
     try:
-        for enc_name, kw in (
-            ("cnn", {"method": "att"}),
-            ("cnn", {"method": "avg"}),
-            ("cnn", {"method": "att", "bag_cap": 3}),
-            ("cnn", {"method": "att", "bag_size": 4}),
-            ("pcnn", {"method": "att"}),
+        for enc_name, kw, inputs, tol in (
+            ("cnn", {"method": "att"}, (instances, encoded), 1e-6),
+            ("cnn", {"method": "avg"}, (instances, encoded), 1e-6),
+            ("cnn", {"method": "one"}, (instances, encoded), 1e-6),
+            ("cnn", {"method": "att", "bag_cap": 3}, (instances, encoded), 1e-6),
+            ("cnn", {"method": "att", "bag_size": 4}, (instances, encoded), 1e-6),
+            ("pcnn", {"method": "att"}, (instances, encoded), 1e-6),
+            ("bert", {"method": "att"}, (few,), 2e-5),
         ):
             scored = score_instances(
-                instances, with_rep=True, encoder=enc_name
+                inputs[0], with_rep=True, with_scores=True, encoder=enc_name
             )
-            two_pass = {
-                (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-                for r in bag_scores_batched(scored, encoder=enc_name, **kw).collect()
-            }
-            for bag_in in (instances, encoded):
-                fused = {
-                    (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-                    for r in bag_scores_fused(
-                        bag_in, encoder=enc_name, **kw
-                    ).collect()
-                }
-                assert fused.keys() == two_pass.keys(), (enc_name, kw)
-                for k, (n, s) in two_pass.items():
-                    n2, s2 = fused[k]
-                    assert n == n2, (enc_name, kw, k)
-                    assert len(s) == len(s2)
-                    assert max(
-                        abs(a - b) for a, b in zip(s, s2)
-                    ) < 1e-6, (enc_name, kw, k)
+            two_pass = _bags(bag_scores(scored, encoder=enc_name, **kw))
+            for bag_in in inputs:
+                fused = _bags(bag_scores_fused(bag_in, encoder=enc_name, **kw))
+                _assert_bags_close(fused, two_pass, tol, (enc_name, kw))
     finally:
         instances.unpersist()
         encoded.unpersist()
 
 
-def test_fused_bag_plan_single_exchange(spark, transcripts):
-    """The fused att path from a pre-encoded table is ONE hash exchange
-    on the bag key + external sort + the streaming kernel — no rep
-    column, no Aggregate/Window/collect_list, no second exchange."""
+def test_bag_plan_no_aggregation_buffer(spark, transcripts):
+    """Bag members must never accumulate in a JVM aggregation buffer
+    (VERDICT r2 #3 memory bound): a collect_list shape concentrates the
+    member rows of a few thousand bags into ObjectHashAggregate state.
+    The capped `one` bag plan is exactly ONE hash exchange on the bag
+    key, a spill-safe external sort, and the streaming mapInArrow
+    kernel: no Aggregate, no collect_list anywhere. Capped rows are
+    dropped as they stream in Python."""
     import contextlib
     import io
     import re
 
-    from opennre_spark.operators.bags import bag_scores_fused
+    instances = candidate_pairs(detect_mentions(transcripts, relations.gazetteer()))
+    # cut the upstream lineage so the plan under test is just the bag path
+    instances = spark.createDataFrame(instances.limit(50).collect(), instances.schema)
+    bags = bag_scores_fused(instances, method="one", bag_cap=2)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        bags.explain("formatted")
+    plan = buf.getvalue()
+    # formatted output lists each node once in the tree and once in the
+    # numbered details — count the numbered nodes
+    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
+    assert "hashpartitioning(h_id" in plan, plan
+    assert "collect_list" not in plan, plan
+    assert "Aggregate" not in plan, plan
+
+
+def test_fused_bag_plan_single_exchange(spark, transcripts):
+    """The fused capped att path from a pre-encoded table is ONE hash
+    exchange on the bag key + a spill-safe external sort + the streaming
+    kernel, in that order: no rep column, and no Aggregate/Window/
+    collect_list, so bag members never accumulate in a JVM aggregation
+    buffer (VERDICT r2 #3 memory bound). The cap drops rows in Python as
+    they stream, and the capped output honours the bound."""
+    import contextlib
+    import io
+    import re
+
     from opennre_spark.operators.scoring import encode_instances
 
     mentions = detect_mentions(transcripts, relations.gazetteer())
     encoded = encode_instances(candidate_pairs(mentions))
     # cut the upstream lineage so the plan under test is just the bag path
     encoded = spark.createDataFrame(encoded.limit(50).collect(), encoded.schema)
-    bags = bag_scores_fused(encoded, method="att")
+    bags = bag_scores_fused(encoded, method="att", bag_cap=2)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         bags.explain("formatted")
     plan = buf.getvalue()
+    # formatted output lists each node once in the tree and once in the
+    # numbered details — count the numbered nodes
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert "hashpartitioning(h_id" in plan, plan
+    assert plan.count("hashpartitioning(h_id") == 1, plan
     assert "collect_list" not in plan, plan
     assert "Aggregate" not in plan, plan
+    assert "Window" not in plan, plan
     assert " rep#" not in plan, plan
+
+    def node_num(pattern):
+        m = re.search(r"\((\d+)\) " + pattern, plan)
+        assert m, f"{pattern!r} not in plan:\n{plan}"
+        return int(m.group(1))
+
+    # leaf-first numbering: exchange -> sort -> python kernel
+    assert node_num(r"Exchange\n") < node_num(r"Sort\n") < node_num(
+        r"MapInArrow\n"
+    ), plan
+    out = bags.collect()
+    assert out and all(r.n_sentences <= 2 for r in out)
 
 
 def test_fused_bag_spanning_record_batches(spark, transcripts):
     """A bag larger than the Arrow batch size spans multiple record
     batches in the fused kernel: its members are scored in different
     batches and concatenated by the cross-batch carry. Counts and
-    member selection must stay identical to the two-pass route (cap
-    enforced across the span too); scores within the 1e-6 bar."""
-    from opennre_spark.operators.bags import bag_scores_batched, bag_scores_fused
-
+    member selection must stay identical to the same route over whole
+    bags (default batch size; checked against the oracle route by
+    test_bag_scores_fused_matches_two_pass) — the cap enforced across
+    the span too, with the rows past it never scored; scores within the
+    1e-6 bar."""
     mentions = detect_mentions(transcripts, relations.gazetteer())
     instances = candidate_pairs(mentions).cache()
-    scored = score_instances(instances, with_rep=True)
+    cases = ({"method": "att"}, {"method": "att", "bag_cap": 5},
+             {"method": "one", "bag_cap": 5})
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
-        baseline = {
-            (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-            for r in bag_scores_batched(scored, method="att").collect()
-        }
-        base_cap = {
-            (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-            for r in bag_scores_batched(scored, method="att", bag_cap=5).collect()
-        }
-        assert any(n > 4 for n, _ in baseline.values()), "need a bag > batch size"
+        want = [_bags(bag_scores_fused(instances, **kw)) for kw in cases]
+        assert any(n > 4 for n, _ in want[0].values()), "need a bag > batch size"
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-        for kw, want in (({}, baseline), ({"bag_cap": 5}, base_cap)):
-            fused = {
-                (r.h_id, r.t_id): (r.n_sentences, tuple(r.scores))
-                for r in bag_scores_fused(instances, method="att", **kw).collect()
-            }
-            assert fused.keys() == want.keys(), kw
-            for k, (n, s) in want.items():
-                n2, s2 = fused[k]
-                assert n == n2, (kw, k)
-                assert max(abs(a - b) for a, b in zip(s, s2)) < 1e-6, (kw, k)
+        for kw, w in zip(cases, want):
+            _assert_bags_close(_bags(bag_scores_fused(instances, **kw)), w, 1e-6, kw)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
         instances.unpersist()

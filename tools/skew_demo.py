@@ -1,19 +1,25 @@
 """Hot-entity-pair skew demonstration for the `att` bag path
 (VERDICT r2 item 8) and the TRAINING bag-assembly path (VERDICT r3
-item 8): measure that the deterministic bag cap, enforced BEFORE
-collect_list (bags.bag_scores_batched for eval,
-training.assemble_train_bags for the train loop), bounds executor
-memory on a pathological bag, while the uncapped whole-bag assembly
-exhausts a constrained heap.
+item 8).
+
+Eval (bags.bag_scores_fused): members stream through one hash exchange
+and an external sort into the Python bag kernel, so no JVM aggregation
+buffer exists. The deterministic cap acts before scoring: it bounds the
+rows the kernel encodes and the member matrix one worker holds
+(members x H float32). Uncapped, the hot bag is scored and held whole.
+
+Train (training.assemble_train_bags): the cap is enforced BEFORE
+collect_list, so it bounds the aggregation buffer; the uncapped
+whole-bag assembly exhausts a constrained heap.
 
 Protocol: each scenario runs in its OWN JVM with a deliberately small
 heap (SPARK_DRIVER_MEM, default 1g — local mode puts driver and
-executors in one JVM, so this bounds the aggregation buffer arena the
-way a real executor's heap would). The input is one hot (h, t) pair
-with N_HOT members — rep vectors (eval) / encoded token+pos arrays
-(train) generated JVM-side, no parquet — plus background bags. `att`
-with bag_size=0 genuinely needs whole bags, so bag_cap is exactly the
-knob that makes the buffer boundable.
+executors in one JVM, so this bounds the buffer arena the way a real
+executor's heap would). The input is one hot (h, t) pair with N_HOT
+members — raw instance rows (eval) / encoded token+pos arrays (train)
+generated JVM-side, no parquet — plus background bags. `att` with
+bag_size=0 genuinely needs whole bags, so bag_cap is exactly the knob
+that makes the bag boundable.
 
 Run both scenarios of one path and print a summary:
 
@@ -43,43 +49,41 @@ HEAP = os.environ.get("SPARK_DRIVER_MEM", "1g")
 
 
 def build_input(spark, n_hot: int):
-    """(h_id, t_id, conv_id, turn_idx, pair_turn_idx, h_begin, t_begin,
-    rep[230]) — one hot pair with n_hot members + background bags.
-    rep values are a cheap deterministic hash expression; the point is
-    buffer VOLUME, not the math."""
+    """Raw instance rows (h_id, t_id, stable-order cols, text + entity
+    spans) — one hot pair with n_hot members + background bags. Each
+    text names its pair and a turn number; the point is bag VOLUME,
+    not the relations."""
     from pyspark.sql import functions as F
 
-    from opennre_spark import config
+    def rows(ids, h, t, conv, turn, pair_turn):
+        text = F.concat(h, F.lit(" met "), t, F.lit(" in turn "), turn.cast("string"))
+        return ids.select(
+            h.alias("h_id"),
+            t.alias("t_id"),
+            conv.alias("conv_id"),
+            turn.alias("turn_idx"),
+            pair_turn.alias("pair_turn_idx"),
+            F.lit(0).alias("h_begin"),
+            F.length(h).cast("int").alias("h_end"),
+            (F.length(h) + 5).cast("int").alias("t_begin"),
+            (F.length(h) + 5 + F.length(t)).cast("int").alias("t_end"),
+            text.alias("text"),
+        )
 
-    hot = spark.range(n_hot).select(
-        F.lit("HOT_H").alias("h_id"),
-        F.lit("HOT_T").alias("t_id"),
-        F.concat(F.lit("c"), (F.col("id") % 97).cast("string")).alias("conv_id"),
-        (F.col("id") % 1000).cast("int").alias("turn_idx"),
-        (F.col("id") % 7).cast("int").alias("pair_turn_idx"),
-        (F.col("id") % 11).cast("int").alias("h_begin"),
-        (F.col("id") % 13).cast("int").alias("t_begin"),
-        F.col("id").alias("__seed"),
+    i = F.col("id")
+    hot = rows(
+        spark.range(n_hot), F.lit("HOT_H"), F.lit("HOT_T"),
+        F.concat(F.lit("c"), (i % 97).cast("string")),
+        (i % 1000).cast("int"), (i % 7).cast("int"),
     )
-    bg = spark.range(N_BG_BAGS * BG_MEMBERS).select(
-        F.concat(F.lit("h"), (F.col("id") % N_BG_BAGS).cast("string")).alias("h_id"),
-        F.concat(F.lit("t"), (F.col("id") % N_BG_BAGS).cast("string")).alias("t_id"),
-        F.concat(F.lit("bc"), (F.col("id") % 31).cast("string")).alias("conv_id"),
-        (F.col("id") % 100).cast("int").alias("turn_idx"),
-        F.lit(0).alias("pair_turn_idx"),
-        F.lit(0).alias("h_begin"),
-        F.lit(1).alias("t_begin"),
-        (F.col("id") + 10_000_000).alias("__seed"),
+    bg = rows(
+        spark.range(N_BG_BAGS * BG_MEMBERS),
+        F.concat(F.lit("h"), (i % N_BG_BAGS).cast("string")),
+        F.concat(F.lit("t"), (i % N_BG_BAGS).cast("string")),
+        F.concat(F.lit("bc"), (i % 31).cast("string")),
+        (i % 100).cast("int"), F.lit(0),
     )
-    H = config.HIDDEN_SIZE
-    rep = F.transform(
-        F.sequence(F.lit(0), F.lit(H - 1)),
-        lambda i: (
-            F.pmod(F.xxhash64(F.col("__seed") * H + i), F.lit(1000)).cast("float")
-            / 1000.0
-        ).cast("float"),
-    )
-    return hot.unionByName(bg).withColumn("rep", rep).drop("__seed")
+    return hot.unionByName(bg)
 
 
 def build_train_input(spark, n_hot: int):
@@ -162,7 +166,9 @@ def run_train_scenario(bag_cap: int, n_hot: int) -> None:
 
 
 def run_scenario(bag_cap: int, n_hot: int) -> None:
-    from opennre_spark.operators.bags import bag_scores_batched
+    from pyspark.sql import functions as F
+
+    from opennre_spark.operators.bags import bag_scores_fused
     from opennre_spark.session import get_spark
 
     spark = get_spark(
@@ -171,12 +177,20 @@ def run_scenario(bag_cap: int, n_hot: int) -> None:
         shuffle_partitions=16,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    scored = build_input(spark, n_hot)
+    instances = build_input(spark, n_hot)
     t0 = time.time()
-    n = bag_scores_batched(scored, method="att", bag_cap=bag_cap).count()
+    row = bag_scores_fused(instances, method="att", bag_cap=bag_cap).agg(
+        F.count(F.lit(1)).alias("bags"),
+        F.sum("n_sentences").alias("members"),
+    ).first()
     print(
         json.dumps(
-            {"bag_cap": bag_cap, "bags": n, "wall_sec": round(time.time() - t0, 2)}
+            {
+                "bag_cap": bag_cap,
+                "bags": row["bags"],
+                "members_scored": row["members"],
+                "wall_sec": round(time.time() - t0, 2),
+            }
         )
     )
 
