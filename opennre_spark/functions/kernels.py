@@ -34,30 +34,10 @@ def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
     return e / np.sum(e, axis=axis, keepdims=True)
 
 
-def embed_concat(
-    token: np.ndarray,  # (B, L) int
-    pos1: np.ndarray,
-    pos2: np.ndarray,
-    word_emb: np.ndarray,  # (V, word_size) float32
-    pos1_emb: np.ndarray,  # (2L, pos_size) float32, row 0 zeros
-    pos2_emb: np.ndarray,
-) -> np.ndarray:
-    """(B, L, word+2*pos) float32 input features (base_encoder.py:56-69)."""
-    return np.concatenate(
-        [word_emb[token], pos1_emb[pos1], pos2_emb[pos2]], axis=2
-    )
-
-
 # ---------------------------------------------------------------------------
-# Cache-blocked conv path (round-2 rework of the 8->32 scaling miss).
+# Cache-blocked conv path.
 #
-# The shifted-GEMM conv (conv1d_same below) moves ~30 MB of DRAM traffic
-# per 256-row micro-batch (padded input copy + K write/read passes over a
-# (B*Lp, H) accumulator + the (B, L, H) output read back for pooling).
-# With 32 worker processes sharing one memory bus that traffic capped
-# scaling at ~0.65 efficiency (measured, tools/kernel_scaling.py).
-#
-# The blocked path instead processes SLAB-row slabs whose im2col matrix
+# The conv processes SLAB-row slabs whose im2col matrix
 # (slab, Lc, K*C+1) and conv output (slab, Lc, H) both fit in a core's
 # private L2 (~1 MB at slab=32, Lc<=16): ONE fused GEMM per slab (bias
 # folded in as a constant 1-column against a stacked (K*C+1, H) weight
@@ -65,12 +45,11 @@ def embed_concat(
 # segment gating) consumes it before it ever reaches DRAM. Scratch
 # buffers are reused across calls (np.zeros/empty per call costs page
 # faults + kernel zeroing — real traffic at 32 workers). Measured
-# (tools/kernel_scaling.py, max-of-3, 40k rows/proc): 8 procs 96.7k ->
-# 104.7k rows/s, 32 procs 253k -> 365k rows/s; kernel 8->32 efficiency
-# 0.655 -> 0.872. Numerics: the fused GEMM sums the K*C reduction in one
-# pass, so scores move <4e-7 vs the 3-GEMM order — inside the reference's
-# own 1e-6 golden tolerance (tests/test_inference.py:11), and argmax
-# decisions are unchanged (north-rule tests stay exact).
+# (tools/kernel_scaling.py, max-of-3, 40k rows/proc, 32 procs): 365k
+# rows/s, kernel 8->32 efficiency 0.872. Numerics: the fused GEMM sums
+# the K*C reduction in one pass, so scores move <4e-7 vs a per-tap
+# (K-GEMM) order — inside the reference's own 1e-6 golden tolerance
+# (tests/test_inference.py:11), and argmax decisions are unchanged.
 # ---------------------------------------------------------------------------
 
 _SCRATCH: dict = {}
@@ -271,33 +250,6 @@ def _conv_slabs_gemm(token, pos1, pos2, weights, Lc: int, slab: int = _CONV_SLAB
         sout = out[:S]
         np.matmul(sX.reshape(S * Lc, K * C + 1), Wb, out=sout.reshape(S * Lc, H))
         yield lo, hi, sout
-
-
-def conv1d_same(x: np.ndarray, w: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """1-D convolution over the length axis with symmetric zero padding.
-
-    x: (B, L, C); w: (H, C, K); b: (H,). Returns (B, L_out, H) where
-    L_out = L + 2*pad - K + 1 with pad = (K-1)//2 (K=3, pad=1 -> L).
-
-    Decomposed as K shifted GEMMs accumulating into one output buffer:
-    out[:, t, :] = sum_k xp[:, t+k, :] @ w[:, :, k].T. This avoids
-    materializing the (B, L, C*K) im2col matrix — with 32 concurrent
-    Python workers the im2col copy made the kernel memory-bandwidth-
-    bound and capped multi-core scaling (measured ~1.7x at 4x cores).
-    """
-    B, L, C = x.shape
-    H, _, K = w.shape
-    pad = (K - 1) // 2
-    Lp = L + 2 * pad
-    xp = np.zeros((B, Lp, C), dtype=np.float32)
-    xp[:, pad : pad + L, :] = x
-    x2 = xp.reshape(B * Lp, C)
-    out = np.broadcast_to(b.astype(np.float32), (B, L, H)).copy()
-    y = np.empty((B * Lp, H), dtype=np.float32)
-    for k in range(K):
-        np.matmul(x2, w[:, :, k].T.astype(np.float32), out=y)  # one GEMM
-        out += y.reshape(B, Lp, H)[:, k : k + L, :]
-    return out
 
 
 def cnn_forward(

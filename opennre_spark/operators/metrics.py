@@ -16,9 +16,6 @@ from pyspark.sql import functions as F
 
 from .. import config
 
-def _rank_order():
-    return [F.col("score").desc(), "h_id", "t_id", "relation"]
-
 
 def ranked_cumsum(
     df: DataFrame,

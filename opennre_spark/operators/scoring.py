@@ -27,7 +27,6 @@ from typing import Iterator
 import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import config
@@ -390,13 +389,12 @@ def _score_frame(
 
 def score_instances(
     instances: DataFrame,
-    pcnn: bool = False,
     with_rep: bool = False,
     with_scores: bool = False,
     micro_batch: int = config.EVAL_MICRO_BATCH,
     consumed: tuple = _CONSUMED,
     schema: str = "reduced",
-    encoder: str | None = None,
+    encoder: str = "cnn",
     classifier: str = "softmax",
     ckpt: str | None = None,
 ) -> DataFrame:
@@ -409,15 +407,13 @@ def score_instances(
 
     encoder: 'cnn' (default), 'pcnn', 'bert' (CLS pooler,
     bert_encoder.py:7-103) or 'bert_entity' (entity-start gather,
-    bert_encoder.py:106-215). The legacy `pcnn` flag maps to 'pcnn'.
+    bert_encoder.py:106-215).
     classifier: 'softmax' (SoftmaxNN, softmax_nn.py:53-54) or 'sigmoid'
     (SigmoidNN multi-label scoring, sigmoid_nn.py:39-40).
     ckpt: optional exported .npz state dict (S4 checkpoint source) —
     weights.load_state_dict_npz for CNN/PCNN, bert_kernels.
     load_bert_state_dict_npz for the BERT encoders.
     """
-    if encoder is None:
-        encoder = "pcnn" if pcnn else "cnn"
     return _score_frame(
         instances, consumed, encoder, schema, ckpt, with_rep, with_scores,
         classifier, micro_batch, encoded=False,
@@ -507,12 +503,11 @@ def encode_instances(
 
 def score_encoded(
     encoded: DataFrame,
-    pcnn: bool = False,
     with_rep: bool = False,
     with_scores: bool = False,
     micro_batch: int = config.EVAL_MICRO_BATCH,
     schema: str = "reduced",
-    encoder: str | None = None,
+    encoder: str = "cnn",
     classifier: str = "softmax",
     ckpt: str | None = None,
 ) -> DataFrame:
@@ -524,8 +519,6 @@ def score_encoded(
     rows (shared tokenizer, shared positions_from_starts, shared
     kernels; asserted by tests/test_pipeline.py).
     """
-    if encoder is None:
-        encoder = "pcnn" if pcnn else "cnn"
     if encoder not in ("cnn", "pcnn"):
         raise ValueError(
             f"score_encoded supports cnn/pcnn, got {encoder!r} "
@@ -535,15 +528,3 @@ def score_encoded(
         encoded, ("tok_bin", "h_start", "t_start", "n_tok"), encoder, schema,
         ckpt, with_rep, with_scores, classifier, micro_batch, encoded=True,
     )
-
-
-def sentence_predictions(scored: DataFrame, id2rel: dict[int, str]) -> DataFrame:
-    """Map argmax rel ids to names via a broadcast join with the
-    relations dim (SURVEY.md J5) — keeps the mapping in the plan instead
-    of a Python UDF.
-    """
-    spark = scored.sparkSession
-    rels = spark.createDataFrame(
-        [(i, r) for i, r in sorted(id2rel.items())], "pred_rel_id int, relation string"
-    )
-    return scored.join(F.broadcast(rels), "pred_rel_id", "left")

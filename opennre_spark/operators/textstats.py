@@ -24,11 +24,6 @@ def _tokens(text_col: Column) -> Column:
     return F.split(F.lower(F.trim(text_col)), r"\s+")
 
 
-def token_count(text_col: Column) -> Column:
-    """Whitespace token count (T3-equivalent counting)."""
-    return F.size(_tokens(text_col)).cast("long")
-
-
 def bpe_ish_token_count(text_col: Column) -> Column:
     """Sub-word-ish token estimate: splits on whitespace, punctuation
     boundaries and letter/digit transitions — a deterministic stand-in
@@ -41,95 +36,11 @@ def bpe_ish_token_count(text_col: Column) -> Column:
     return F.size(F.filter(pieces, lambda p: F.length(p) > 0)).cast("long")
 
 
-def stopword_ratio(text_col: Column, lang: str = "en") -> Column:
-    stops = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    toks = _tokens(text_col)
-    return (
-        F.size(F.filter(toks, lambda t: F.array_contains(stops, t))).cast("double")
-        / F.size(toks)
-    )
-
-
 def alpha_ratio(text_col: Column) -> Column:
     return (
         F.length(F.regexp_replace(text_col, "[^a-zA-Z]", "")).cast("double")
         / F.length(text_col)
     )
-
-
-def quality_score(text_col: Column) -> Column:
-    """Composite [0,1] quality heuristic: balanced length, alphabetic
-    density, stopword presence, low repetition (distinct-token ratio).
-    Deterministic; weights are fixed documentation, not learned.
-    """
-    toks = _tokens(text_col)
-    n = F.size(toks)
-    len_score = F.least(n.cast("double") / 20.0, F.lit(1.0))
-    distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
-    return F.round(
-        0.3 * len_score
-        + 0.3 * alpha_ratio(text_col)
-        + 0.2 * stopword_ratio(text_col)
-        + 0.2 * distinct_ratio,
-        6,
-    )
-
-
-def _stop_hits(toks: Column, lang: str) -> Column:
-    """Count of tokens in the given language's stopword list.
-    NB: a closure factory, not a default-arg lambda — pyspark counts a
-    lambda's parameters (defaults included) to pick the higher-order
-    function arity, so `lambda t, l=l:` would silently bind the element
-    index to l."""
-    stops = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
-
-
-def lang_scores(text_col: Column) -> Column:
-    """map<lang, hits>: stopword-list vote counts per language."""
-    toks = _tokens(text_col)
-    return F.map_from_arrays(
-        F.array(*[F.lit(l) for l in STOPWORDS]),
-        F.array(*[_stop_hits(toks, l) for l in STOPWORDS]),
-    )
-
-
-def detect_lang(text_col: Column) -> Column:
-    """argmax language by stopword hits, 'und' (undetermined) on zero
-    hits; ties broken by language-key order (deterministic)."""
-    toks = _tokens(text_col)
-    hit_structs = F.array(
-        *[
-            F.struct(
-                _stop_hits(toks, l).alias("hits"),
-                F.lit(i).alias("ord"),
-                F.lit(l).alias("lang"),
-            )
-            for i, l in enumerate(STOPWORDS)
-        ]
-    )
-    best = F.array_max(
-        F.transform(
-            hit_structs,
-            lambda s: F.struct(
-                s["hits"].alias("hits"), (-s["ord"]).alias("nord"), s["lang"].alias("lang")
-            ),
-        )
-    )
-    return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def fingerprint(text_col: Column) -> Column:
-    """64-bit content fingerprint: xxhash64 over the whitespace-
-    normalized, lowercased text (stable under whitespace jitter)."""
-    return F.xxhash64(F.concat_ws(" ", _tokens(text_col)))
-
-
-def fingerprint_md5(text_col: Column) -> Column:
-    """Cross-engine fingerprint variant: md5 hex of the same
-    whitespace-normalized text (xxhash64 is Spark-only; md5 hex strings
-    agree with DuckDB, which makes this the oracle-checkable rendition)."""
-    return F.md5(F.concat_ws(" ", _tokens(text_col)))
 
 
 def winnow_fingerprints(
@@ -147,11 +58,13 @@ def winnow_fingerprints(
     deduplicated — a content-overlap sketch that is robust to
     insertions/reordering where a whole-document hash is not.
 
-    Everything is JVM-side higher-order functions over one normalized
-    string column — whole-stage codegen, no shuffle, no Python. The
-    polynomial hash is exact 64-bit arithmetic (max code 122 with
-    base 257, k=4 -> < 2^32), so the identical expression is evaluable
-    in DuckDB for the oracle.
+    The normalization is a JVM regex; the rolling hash and the window
+    minima run in one vectorized numpy pass per Arrow batch
+    (mapInArrow) — narrow, no shuffle. The polynomial hash is exact
+    64-bit integer arithmetic, so the identical expression is evaluable
+    in DuckDB for the oracle; k/base combinations whose largest gram
+    hash (every character the maximal code 122, 'z') would overflow
+    int64 are rejected, as are k or window below 1.
 
     Normalization: lowercase, strip everything outside [a-z0-9 ],
     collapse runs of spaces, trim. Documents shorter than k characters
@@ -164,6 +77,14 @@ def winnow_fingerprints(
     import numpy as np
     from pyspark.sql import types as T
 
+    if k < 1 or window < 1:
+        raise ValueError(
+            f"winnow_fingerprints needs k >= 1 and window >= 1, got {k}, {window}"
+        )
+    if 122 * sum(base**j for j in range(k)) >= 2**63:
+        raise ValueError(
+            f"winnow_fingerprints: k={k} with base={base} overflows the int64 gram hash"
+        )
     t = F.trim(
         F.regexp_replace(
             F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", ""),
@@ -178,19 +99,18 @@ def winnow_fingerprints(
     # at sf1.0, almost all per-element expression-eval overhead. The
     # normalization stays a JVM regex; the rolling hash + window-min
     # moves into ONE vectorized numpy pass per Arrow batch: byte codes
-    # via frombuffer, the k-gram polynomial as four shifted int64
-    # multiply-adds, window minima as elementwise minimum of the four
-    # shifted gram arrays, distinct via np.unique. Exact 64-bit integer
-    # arithmetic, identical fingerprint SETS per document (np.unique
-    # sorts where array_distinct kept first-occurrence order — row
-    # order is not part of the contract), so the bit-exact DuckDB
-    # oracle is unchanged. Narrow (zero-exchange), same as before.
+    # via frombuffer, the k-gram polynomial as k shifted int64
+    # multiply-adds (Horner), window minima as the elementwise minimum
+    # of `window` shifted gram arrays, distinct via np.unique. Exact
+    # 64-bit integer arithmetic, identical fingerprint SETS per
+    # document (np.unique sorts where array_distinct kept first-
+    # occurrence order — row order is not part of the contract), so the
+    # bit-exact DuckDB oracle is unchanged. Narrow (zero-exchange).
     staged = docs.select(F.col(id_col), t.alias("__t"))
     id_field = staged.schema[id_col]
     out_schema = T.StructType(
         [id_field, T.StructField("fp", T.LongType(), False)]
     )
-    b3, b2, b1 = base**3, base**2, base
 
     def run(batches):
         import pyarrow as pa
@@ -205,14 +125,16 @@ def winnow_fingerprints(
                 if L < k:
                     continue
                 c = np.frombuffer(bs, dtype=np.uint8).astype(np.int64)
-                g = c[: L - 3] * b3 + c[1 : L - 2] * b2 + c[2 : L - 1] * b1 + c[3:]
-                if len(g) >= window:
-                    fp = np.unique(
-                        np.minimum(
-                            np.minimum(g[:-3], g[1:-2]),
-                            np.minimum(g[2:-1], g[3:]),
-                        )
-                    )
+                n = L - k + 1
+                g = c[:n]
+                for j in range(1, k):
+                    g = g * base + c[j : j + n]
+                if n >= window:
+                    m = n - window + 1
+                    fp = g[:m]
+                    for j in range(1, window):
+                        fp = np.minimum(fp, g[j : j + m])
+                    fp = np.unique(fp)
                 else:
                     fp = g.min(keepdims=True)
                 idx.extend([i] * len(fp))
@@ -233,8 +155,16 @@ def winnow_fingerprints(
 
 def _stats_struct(tv: Column, t: Column) -> Column:
     """All token-derived stats as ONE struct over the BOUND token array
-    `tv` — field expressions identical to the public per-column
-    functions, with `tv` replacing their own `_tokens(t)`."""
+    `tv` (the whitespace tokens of `t`): token count, English stopword
+    ratio, the composite [0,1] quality heuristic (balanced length,
+    alphabetic density, stopword presence, distinct-token ratio; fixed
+    weights), the stopword-vote language guess ('und' on zero hits,
+    ties by language-key order) and the normalized text.
+
+    The per-language stopword filters use a closure factory, not a
+    default-arg lambda: pyspark counts a lambda's parameters (defaults
+    included) to pick the higher-order function's arity, so
+    `lambda tok, stops=stops:` would bind the element index."""
     n = F.size(tv)
     stops_en = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     sw_ratio = (
@@ -293,12 +223,11 @@ def document_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     """One-pass per-document stat table.
 
     r7 (guide §1.2): the token-derived columns share ONE evaluation of
-    the token array — the per-column functions each inlined their own
-    `_tokens` split into interpreted filter HOFs, so the split ran once
-    per column. The bound stats struct is evaluated in a Generate node
-    (`inline(array(struct))`), which projection collapse cannot
-    duplicate; its fields land as real attributes. Values identical
-    column for column."""
+    the token array — separate per-column expressions would each inline
+    their own `_tokens` split into interpreted filter HOFs, so the split
+    would run once per column. The bound stats struct is evaluated in a
+    Generate node (`inline(array(struct))`), which projection collapse
+    cannot duplicate; its fields land as real attributes."""
     from .hof import hof_let
 
     t = F.col(text_col)

@@ -82,9 +82,8 @@ def extract_triples(
     threshold: float = config.SCORE_THRESHOLD,
     bag_cap: int = 0,
     bag_size: int = 0,
-    pcnn: bool = False,
     schema: str = "reduced",
-    encoder: str | None = None,
+    encoder: str = "cnn",
     ckpt: str | None = None,
     encoded: DataFrame | None = None,
 ) -> DataFrame:
@@ -115,8 +114,6 @@ def extract_triples(
     the per-group reference `bag_scores` in tests/oracle/bag_route.py.
     """
     spark = transcripts.sparkSession
-    if encoder is None:
-        encoder = "pcnn" if pcnn else "cnn"
     rel2id = relations.rel2id_for(schema)
     id2rel = {v: k for k, v in rel2id.items()}
 

@@ -1230,7 +1230,7 @@ def _kg_pcnn(spark, sf_dir):
     from ..sources.transcripts import transcripts_df
 
     n = 80 if "0.01" in sf_dir else 40
-    return extract_triples(transcripts_df(spark, n), mode="sentence", pcnn=True)
+    return extract_triples(transcripts_df(spark, n), mode="sentence", encoder="pcnn")
 
 
 def _kg_canonical(spark, sf_dir):

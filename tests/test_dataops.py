@@ -5,6 +5,7 @@ driver-side pure-Python recomputations on the same rows."""
 import hashlib
 import math
 import random
+import re
 
 import numpy as np
 import pytest
@@ -18,6 +19,23 @@ WORDS = ("the fast key order sort table scan merge part window small hash "
 
 def _doc(rng, n=30):
     return " ".join(rng.choice(WORDS) for _ in range(n))
+
+
+def py_winnow(text, k=4, w=4, B=257):
+    """Loop reference for winnowing: normalize -> k-gram polynomial
+    hash -> window min -> distinct."""
+    t = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", text.lower())).strip()
+    if len(t) < k:
+        return set()
+    grams = []
+    for p in range(len(t) - k + 1):
+        h = 0
+        for ch in t[p : p + k]:
+            h = h * B + ord(ch)
+        grams.append(h)
+    if len(grams) < w:
+        return {min(grams)}
+    return {min(grams[i : i + w]) for i in range(len(grams) - w + 1)}
 
 
 @pytest.fixture(scope="module")
@@ -230,24 +248,6 @@ def test_ngram_jaccard_prefix_filter_is_exact(spark, docs):
 def test_winnow_fingerprints_python_parity(spark, docs):
     """Spark winnowing == a pure-python reimplementation (normalize ->
     k-gram polynomial hash -> window min -> distinct)."""
-    import re
-
-    k, w, B = 4, 4, 257
-
-    def py_winnow(text):
-        t = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", text.lower())).strip()
-        if len(t) < k:
-            return set()
-        grams = []
-        for p in range(len(t) - k + 1):
-            h = 0
-            for ch in t[p : p + k]:
-                h = h * B + ord(ch)
-            grams.append(h)
-        if len(grams) < w:
-            return {min(grams)}
-        return {min(grams[i : i + w]) for i in range(len(grams) - w + 1)}
-
     out = textstats.winnow_fingerprints(docs).collect()
     got = {}
     for r in out:
@@ -256,6 +256,29 @@ def test_winnow_fingerprints_python_parity(spark, docs):
     for did, text in texts.items():
         want = py_winnow(text)
         assert got.get(did, set()) == want, f"doc {did}"
+
+
+def test_winnow_fingerprints_honour_k_and_window(spark):
+    """Non-default gram lengths and windows match the loop reference
+    (short texts exercise the fewer-than-window and shorter-than-k
+    boundary rules); out-of-range k/window and a k whose gram hash
+    overflows int64 are rejected."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "Winnowing: local fingerprints, 2003!",
+        "abcde",
+        "ab",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for k, w in ((2, 6), (3, 2), (5, 5), (6, 3)):
+        got = {}
+        for r in textstats.winnow_fingerprints(df, k=k, window=w).collect():
+            got.setdefault(r.doc_id, set()).add(r.fp)
+        for i, t in enumerate(texts):
+            assert got.get(i, set()) == py_winnow(t, k, w), (k, w, t)
+    for kw in ({"k": 0}, {"window": 0}, {"k": 9}):
+        with pytest.raises(ValueError):
+            textstats.winnow_fingerprints(df, **kw)
 
 
 def test_winnow_fingerprints_detect_overlap(spark):
@@ -290,8 +313,6 @@ def test_ngram_df_join_aqe_skew_split_engages(spark):
     Thresholds are scaled to the fixture (the 256 MB default exists
     for real clusters); the *shape* of the decision — hot partition >
     max(threshold, factor * median) — is what's under test."""
-    import re
-
     conf_keys = {
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2.0",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "4k",
@@ -404,23 +425,7 @@ def test_winnow_hypothesis_vs_python(spark):
     """Random unicode-ish text through Spark winnowing == the python
     reference (normalization edge cases: punctuation, digits, unicode,
     runs of spaces, short strings)."""
-    import re
-
     from hypothesis import given, settings, strategies as st
-
-    def py_winnow(text, k=4, w=4, B=257):
-        t = re.sub(" +", " ", re.sub("[^a-z0-9 ]", "", text.lower())).strip()
-        if len(t) < k:
-            return set()
-        grams = []
-        for p in range(len(t) - k + 1):
-            h = 0
-            for ch in t[p : p + k]:
-                h = h * B + ord(ch)
-            grams.append(h)
-        if len(grams) < w:
-            return {min(grams)}
-        return {min(grams[i : i + w]) for i in range(len(grams) - w + 1)}
 
     texts_strategy = st.lists(
         st.text(

@@ -8,11 +8,8 @@ share a canonical id).
 import pytest
 
 from opennre_spark import relations
-from opennre_spark.operators.linking import (
-    candidate_edges,
-    connected_components,
-    link_entities,
-)
+from opennre_spark.operators import dedup
+from opennre_spark.operators.linking import connected_components, link_entities
 
 
 def test_connected_components_basic(spark):
@@ -35,6 +32,15 @@ def test_connected_components_long_chain(spark):
     comp = {r.node: r.component for r in connected_components(edges).collect()}
     assert set(comp.values()) == {0}
     assert len(comp) == n + 1
+
+
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    """Unconverged labels are an error, not a result."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
 
 
 def _uf_oracle(edges):
@@ -107,12 +113,30 @@ def test_connected_components_property_vs_union_find(spark):
         assert got == _uf_oracle(edges), f"seed {seed}: CC != union-find"
 
 
-def test_candidate_edges_find_variants(spark):
+class _PairFinderCalled(Exception):
+    pass
+
+
+def test_link_pair_finder_finds_variants(spark, monkeypatch):
+    """link_entities' call of the shared MinHash-LSH pair finder (its
+    arguments captured, linking stopped before clustering) blocks and
+    verifies surface variants."""
+    calls = []
+
+    def capture(*args, **kwargs):
+        calls.append((args, kwargs))
+        raise _PairFinderCalled
+
     names = spark.createDataFrame(
         [(n,) for _, n, _ in relations.gazetteer()], "name string"
     )
-    edges = candidate_edges(names)
-    got = {(r.name_a, r.name_b) for r in edges.collect()}
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_minhash_pairs", capture)
+        with pytest.raises(_PairFinderCalled):
+            link_entities(names)
+    args, kwargs = calls[0]
+    edges = dedup._minhash_pairs(*args, **kwargs)
+    got = {(r.id_a, r.id_b) for r in edges.collect()}
     # abbreviated person variants must be blocked + verified
     assert ("A. Moreno", "Ada Moreno") in got or ("Ada Moreno", "A. Moreno") in got
 

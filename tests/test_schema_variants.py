@@ -157,7 +157,7 @@ def test_pcnn_pipeline_parity(spark, transcripts):
             want.add((r.h_id, rel, r.t_id))
     got = {
         (r.subj, r.pred, r.obj)
-        for r in extract_triples(transcripts, mode="sentence", pcnn=True).collect()
+        for r in extract_triples(transcripts, mode="sentence", encoder="pcnn").collect()
     }
     assert got == want
 
