@@ -10,3 +10,7 @@ a port of the reference's execution engine.
 """
 
 __version__ = "0.1.0"
+
+# installs the zip re-read guard in every process that imports the
+# package, Python workers included (see _worker.py)
+from . import _worker  # noqa: E402,F401

@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import kernels
+from .scoring import _score_parts
 
 
 def resize_bag(pdf: pd.DataFrame, bag_size: int, h_id: str, t_id: str,
@@ -96,8 +97,10 @@ def bag_scores_fused(
 
     The bag exchange carries the ~200 B/row scoring inputs instead of
     the (H,)-dim rep (guide §2.3 "shuffle keys and metadata instead of
-    payloads"). Rows shuffle by (h_id, t_id), external-sort by the
-    stable member key, and ONE mapInArrow pass scores each record batch
+    payloads"). Rows shuffle by (h_id, t_id) into one partition per
+    task slot (scoring._score_parts; without the count AQE would
+    coalesce the exchange into one task), external-sort by the stable
+    member key, and ONE mapInArrow pass scores each record batch
     (operators.scoring._batch_scorer, the scorer every scoring path
     uses) and streams the rep rows (att/avg) or softmax scores (one)
     straight into the bag walk — neither exists outside Python.
@@ -137,7 +140,7 @@ def bag_scores_fused(
     ]
     part = (
         instances.select(*cols)
-        .repartition("h_id", "t_id")
+        .repartition(_score_parts(instances.sparkSession), "h_id", "t_id")
         .sortWithinPartitions("h_id", "t_id", *sort_cols)
     )
     with_rep = method != "one"

@@ -36,6 +36,18 @@ from .. import config
 _CONSUMED = ("text", "h_end", "t_end", "h_name", "t_name")
 
 
+def _score_parts(spark) -> int:
+    """Partition count of a scoring stage: one task per task slot.
+
+    Scoring is CPU-bound numpy (~40 us/row) over ~200 B rows, so AQE's
+    byte-based coalescing would fold it into one or two tasks; an
+    explicit count is never coalesced. More tasks than slots buy no
+    parallelism, and each Python task has a fixed start-up cost, so the
+    count is the slot count (DS2, OSDI'18: size parallelism from slots
+    and rates, not a fixed floor)."""
+    return spark.sparkContext.defaultParallelism
+
+
 # --- Arrow-native batch plumbing (r6) ---------------------------------
 # The scoring stages are mapInArrow, not mapInPandas: the pandas
 # round-trip materialized a python object per cell for binary and

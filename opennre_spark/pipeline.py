@@ -18,7 +18,9 @@ from . import config, relations
 from .operators.bags import bag_scores_fused, explode_bag_scores
 from .operators.candidates import candidate_pairs
 from .operators.mentions import detect_mentions
-from .operators.scoring import encode_instances, score_encoded, score_instances
+from .operators.scoring import (
+    _score_parts, encode_instances, score_encoded, score_instances,
+)
 
 
 def na_rel_id(rel2id: dict[str, int]) -> int | None:
@@ -59,14 +61,13 @@ def encode_candidates(
     in extract_triples).
     """
     mentions = detect_mentions(transcripts, relations.gazetteer())
-    spark = transcripts.sparkSession
-    n_score_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
-    # r7: the scoring-parallelism repartition moved BEFORE the direction
+    # the scoring-parallelism repartition sits BEFORE the direction
     # explode (inside candidate_pairs) so a pair's two directed
     # instances stay adjacent for the encode kernel's tokenize memo —
     # see candidate_pairs(repartition=...)
     instances = candidate_pairs(
-        mentions, window_turns=window_turns, repartition=n_score_parts
+        mentions, window_turns=window_turns,
+        repartition=_score_parts(transcripts.sparkSession),
     )
     scoring_cols = [
         "text", "h_begin", "h_end", "t_begin", "t_end", "h_id", "t_id",
@@ -137,21 +138,19 @@ def extract_triples(
         instances = encoded.select(*cols)
     else:
         mentions = detect_mentions(transcripts, relations.gazetteer())
-        # Scoring is CPU-bound Python (numpy kernels), ~40us/row but only
-        # ~200 bytes/row: AQE's byte-based partition coalescing would fuse
-        # it into a handful of post-join partitions and starve the
-        # executors (measured 2.2x slowdown at local[32]). A round-robin
-        # repartition pins the sentence scoring stage's parallelism to
-        # the cluster size; it sits BEFORE the direction explode
+        # Sentence scoring runs in one task per slot (_score_parts): a
+        # round-robin repartition to defaultParallelism, which AQE
+        # does not coalesce. Fewer tasks would idle slots; more would
+        # each pay the fixed Python task start-up for no extra
+        # parallelism. It sits BEFORE the direction explode
         # (candidate_pairs(repartition=...)) so direction twins stay
         # adjacent for the encode kernel's tokenize memo. Bag modes skip
-        # it: the bag key exchange immediately follows and pins
-        # parallelism itself — two back-to-back exchanges would shuffle
-        # twice.
-        n_score_parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+        # it: bag_scores_fused's (h_id, t_id) exchange follows at once,
+        # with the same explicit count — two back-to-back exchanges
+        # would shuffle twice.
         instances = candidate_pairs(
             mentions, window_turns=window_turns,
-            repartition=n_score_parts if mode == "sentence" else None,
+            repartition=_score_parts(spark) if mode == "sentence" else None,
         )
         # Column hygiene before the Python boundary: sentence mode only
         # needs the pair ids downstream; bag modes additionally need the

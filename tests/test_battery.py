@@ -99,7 +99,9 @@ def test_pyfiles_zip_imports_standalone():
     """Executors import the package FROM the zip (spark-submit
     --py-files), so zipimport must resolve the package AND its data
     fixtures (rel2id json, seed-frozen weights) without a filesystem
-    checkout — subprocess with only the zip on sys.path."""
+    checkout — subprocess with only the zip on sys.path. Importing the
+    package from the zip installs the zip re-read guard, so a later
+    importlib.invalidate_caches() does not re-read the unchanged zip."""
     import os
     import subprocess
     import sys
@@ -112,6 +114,12 @@ def test_pyfiles_zip_imports_standalone():
         "from opennre_spark.functions.weights import default_model\n"
         "v, w = default_model(schema='reduced')\n"
         "assert w['fc_w'].shape[0] == 8\n"
+        "import importlib, zipimport\n"
+        "from opennre_spark import _worker\n"
+        "assert zipimport.zipimporter.invalidate_caches is _worker._invalidate_caches\n"
+        "n = _worker.archive_reads\n"
+        "importlib.invalidate_caches()\n"
+        "assert _worker.archive_reads == n\n"
         "print('zip-import-ok')\n"
     )
     p = subprocess.run(

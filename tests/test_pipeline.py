@@ -218,3 +218,47 @@ def test_extract_triples_encoded_equals_default(spark, transcripts):
                 assert abs(s - s2) < 1e-6, (kw, k, s, s2)
     finally:
         encoded.unpersist()
+
+
+def test_extract_triples_invariant_to_partition_counts(spark, transcripts, monkeypatch):
+    """Sentence scoring and the bag exchange run one task per slot
+    (defaultParallelism). Output must not depend on that count or on
+    the shuffle partition count: identical (subj, pred, obj) sets and
+    support, scores within 1e-6, at 1 and at 8 partitions. The bag
+    exchange carries the explicit count, so AQE cannot fold it into
+    one task."""
+    import re
+
+    from pyspark import SparkContext
+
+    shuffle_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    runs = {}
+    try:
+        for n in (1, 8):
+            monkeypatch.setattr(
+                SparkContext, "defaultParallelism", property(lambda self, n=n: n)
+            )
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            for kw in (
+                dict(mode="sentence"), dict(mode="att", bag_cap=2, threshold=0.15)
+            ):
+                df = extract_triples(transcripts, **kw)
+                runs[n, kw["mode"]] = {
+                    (r.subj, r.pred, r.obj): (r.score, r.n_support)
+                    for r in df.collect()
+                }
+                if kw["mode"] == "att" and n > 1:
+                    plan = df._jdf.queryExecution().executedPlan().toString()
+                    assert re.search(
+                        rf"hashpartitioning\(h_id#\d+, t_id#\d+, {n}\), "
+                        r"REPARTITION_BY_NUM", plan
+                    ), plan
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shuffle_parts)
+    for mode in ("sentence", "att"):
+        one, eight = runs[1, mode], runs[8, mode]
+        assert one.keys() == eight.keys(), mode
+        assert len(one) > 0, mode
+        for k, (score, support) in one.items():
+            assert support == eight[k][1], (mode, k)
+            assert abs(score - eight[k][0]) < 1e-6, (mode, k, score, eight[k][0])
