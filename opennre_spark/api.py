@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import config, relations
+from . import relations
 
 # reference get_model names (pretrain.py:129,149,163) -> (schema, encoder);
 # plus engine-native names for the schemas/encoders the reference serves
@@ -92,24 +92,15 @@ class Model:
     identical decisions for identical inputs (pytest-checked)."""
 
     def __init__(self, schema: str, encoder: str, ckpt: str | None = None):
+        from .operators.scoring import _batch_scorer
+
         self.schema = schema
         self.encoder = encoder
         self.rel2id = relations.rel2id_for(schema)
         self.id2rel = {v: k for k, v in self.rel2id.items()}
-        if encoder in ("bert", "bert_entity"):
-            from .functions.bert_kernels import default_bert_model
-
-            self._vocab, self._weights = default_bert_model(
-                entity=(encoder == "bert_entity"), schema=schema, ckpt=ckpt
-            )
-            self._max_length = config.BERT_MAX_LENGTH
-        else:
-            from .functions.weights import default_model
-
-            self._vocab, self._weights = default_model(
-                pcnn=(encoder == "pcnn"), schema=schema, ckpt=ckpt
-            )
-            self._max_length = int(self._weights["max_length"])
+        self._weights, self._score = _batch_scorer(
+            encoder, schema, ckpt, with_rep=False
+        )
 
     def infer(self, item: dict) -> tuple[str, float]:
         """One instance -> (relation name, softmax confidence), the
@@ -119,45 +110,19 @@ class Model:
 
     def infer_batch(self, items: list[dict]) -> list[tuple[str, float]]:
         """Vectorized rendition (the reference loops infer one item at
-        a time; the math is identical, batched through the same Arrow
-        kernels the executors run)."""
-        from .functions import kernels
+        a time; the math is identical): the items become one Arrow
+        record batch scored by the executors' own scorer
+        (scoring._batch_scorer, the one score_instances runs)."""
+        import pyarrow as pa
 
-        fields = [_item_fields(it) for it in items]
-        texts = [f[0] for f in fields]
-        hb = np.array([f[1] for f in fields])
-        he = np.array([f[2] for f in fields])
-        tb = np.array([f[3] for f in fields])
-        te = np.array([f[4] for f in fields])
-        if self.encoder in ("bert", "bert_entity"):
-            from .functions import bert_kernels
-            from .functions.bert_encoding import bert_encode_batch
-
-            enc = bert_encode_batch(
-                texts, hb, he, tb, te, self._vocab, self._max_length
-            )
-            rep_fn = (
-                bert_kernels.bert_entity_rep
-                if self.encoder == "bert_entity"
-                else bert_kernels.bert_cls_rep
-            )
-            rep = rep_fn(
-                enc["token"], enc["att_mask"], enc["pos1"], enc["pos2"],
-                self._weights,
-            )
-            logits = rep @ self._weights["fc_w"].T + self._weights["fc_b"]
-            probs = kernels.softmax(logits, axis=-1)
-        else:
-            from .functions.encoding import encode_batch
-
-            enc = encode_batch(
-                texts, hb, he, tb, te, self._vocab, self._max_length,
-                self._vocab["[PAD]"], self._vocab["[UNK]"],
-                with_mask=(self.encoder == "pcnn"),
-            )
-            _, probs = kernels.sentence_scores(
-                enc, self._weights, pcnn=(self.encoder == "pcnn")
-            )
+        if not items:
+            return []
+        cols = list(zip(*(_item_fields(it) for it in items)))
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array(c) for c in cols],
+            names=["text", "h_begin", "h_end", "t_begin", "t_end"],
+        )
+        probs, _ = self._score(rb)
         out = []
         for row in probs:
             pred = int(np.argmax(row))

@@ -24,14 +24,16 @@ Architecture (HF BertModel as the reference consumes it):
   entity: rep = [x[b,pos1]; x[b,pos2]]@We^T+be (bert_encoder.py:133-143)
 
 Dropout sites mirror HF BertModel's four (embeddings, attention probs,
-attention output, FFN output) at `bert_dropout_p` (HF default 0.1) and
-the classifier's nn.Dropout() at `dropout_p` (softmax_nn.py:24,49,
-torch default 0.5); both default 0 — the deterministic parity surface,
-like the CNN path. GELU uses the tanh approximation (same delta as the
-eval kernel's docstring; both sides of every parity test share it).
+attention output, FFN output) at `bert_dropout_p` (HF default 0.1,
+0 = the deterministic parity surface, like the CNN path). GELU uses
+the tanh approximation (same delta as the eval kernel's docstring;
+both sides of every parity test share it).
 
-SUM-form gradient contract identical to grad_kernels: per-partition
-partials compose exactly, caller divides by the global weight sum.
+This module is the encoder only. The sentence, multi-label and bag
+heads (with the classifier's nn.Dropout() at `dropout_p`) are the
+grad_kernels train kernels, which dispatch BERT weight dicts here
+through encoder_forward_train / encoder_backward — one kernel per
+model for every encoder family, under the same SUM-form contract.
 """
 
 from __future__ import annotations
@@ -298,40 +300,3 @@ def bert_rep_backward(d_rep, cache, W, grads):
     np.add.at(d_hidden, (rows, p2), d_xcat[:, H:])
     bert_backward(d_hidden, None, hidden, cache, W, grads)
 
-
-def bert_sentence_train_batch(
-    token, att_mask, pos1, pos2, labels, weights,
-    class_weights=None, dropout_p: float = 0.0,
-    bert_dropout_p: float = 0.0, rng=None,
-):
-    """One sentence-model batch through BERT -> drop -> fc -> CE
-    (SentenceRE.train_model with a BERT encoder — sentence_re.py:104-127
-    + softmax_nn.py:45-51; unlike the CNN path there is NO trailing
-    encoder dropout, so the classifier's single nn.Dropout() is the
-    only `dropout_p` site). Returns the standard SUM-form 6-tuple
-    (loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads)."""
-    fc_w, fc_b = weights["fc_w"], weights["fc_b"]
-    rep, cache = bert_rep_forward_train(
-        token, att_mask, pos1, pos2, weights,
-        bert_dropout_p=bert_dropout_p, rng=rng,
-    )
-    cls_mask = gk._dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-    rep_d = rep * cls_mask if cls_mask is not None else rep
-    logits = rep_d @ fc_w.T + fc_b
-    loss_wsum, w_sum, d_logits = gk.ce_loss_and_dlogits(
-        logits, labels, class_weights
-    )
-    pred = logits.argmax(axis=-1)
-    n_correct = int((pred == labels).sum())
-    pos = labels != 0
-    n_pos = int(pos.sum())
-    n_pos_correct = int(((pred == labels) & pos).sum())
-
-    grads = gk.zero_grads(weights)
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ rep_d.astype(np.float64)
-    d_rep = d_logits @ fc_w.astype(np.float64)
-    if cls_mask is not None:
-        d_rep *= cls_mask
-    bert_rep_backward(d_rep, cache, weights, grads)
-    return loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads

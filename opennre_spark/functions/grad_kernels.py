@@ -492,7 +492,7 @@ def ce_loss_and_dlogits(logits, labels, class_weights=None):
 
 
 # ---------------------------------------------------------------------------
-# bag attention: train forward + backward over one batch of bags
+# pieces every train kernel shares: encoder + its dropout, the fc head
 # ---------------------------------------------------------------------------
 
 def _dropout_mask(shape, p, rng, dtype):
@@ -502,6 +502,58 @@ def _dropout_mask(shape, p, rng, dtype):
         return None
     return (rng.random(shape) >= p).astype(dtype) / dtype.type(1 - p)
 
+
+def _encode_train(token, pos1, pos2, weights, mask, dropout_p,
+                  bert_dropout_p, rng):
+    """encoder_forward_train + the per-sentence dropout that models the
+    CNN/PCNN encoder's trailing self.drop (cnn_encoder.py:65); BERT
+    encoders have no trailing dropout (bert_encoder.py:23-33), so only
+    the caller's later sites apply there. The encoder mask is drawn
+    before any bag/classifier mask — the rng order every kernel keeps.
+    Returns (rep, rep_d, enc_mask-or-None, cache)."""
+    rep, cache = encoder_forward_train(
+        token, pos1, pos2, weights, mask=mask,
+        bert_dropout_p=bert_dropout_p, rng=rng,
+    )
+    enc_mask = (
+        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
+        if "conv_w" in weights else None
+    )
+    rep_d = rep * enc_mask if enc_mask is not None else rep
+    return rep, rep_d, enc_mask, cache
+
+
+def _fc_backward(d_logits, x, weights):
+    """Backprop SUM-form d_logits through logits = x @ fc_w.T + fc_b:
+    returns (fresh float64 grads holding the fc block, d_x)."""
+    fc_w = weights["fc_w"]
+    grads = zero_grads(weights)
+    grads["fc_b"] += d_logits.sum(axis=0)
+    grads["fc_w"] += d_logits.T @ x.astype(np.float64)
+    return grads, d_logits @ fc_w.astype(np.float64)
+
+
+def _softmax_ce_head(x, labels, weights, class_weights):
+    """fc -> softmax CE over (B, width) reps x: returns
+    ((loss_wsum, w_sum, n_correct, n_pos, n_pos_correct), grads, d_x)
+    with the meters the reference's progress bar reads (label 0 = NA,
+    so pos_acc counts the non-NA rows)."""
+    logits = x @ weights["fc_w"].T + weights["fc_b"]
+    loss_wsum, w_sum, d_logits = ce_loss_and_dlogits(
+        logits, labels, class_weights
+    )
+    pred = logits.argmax(axis=-1)
+    n_correct = int((pred == labels).sum())
+    pos = labels != 0
+    n_pos = int(pos.sum())
+    n_pos_correct = int(((pred == labels) & pos).sum())
+    grads, d_x = _fc_backward(d_logits, x, weights)
+    return (loss_wsum, w_sum, n_correct, n_pos, n_pos_correct), grads, d_x
+
+
+# ---------------------------------------------------------------------------
+# bag models: train forward + backward over one batch of bags
+# ---------------------------------------------------------------------------
 
 def bag_att_train_batch(
     token, pos1, pos2, scopes, labels, weights,
@@ -523,21 +575,12 @@ def bag_att_train_batch(
     different executors compose exactly.
     """
     dt = weights["fc_w"].dtype
-    fc_w, fc_b, diag = weights["fc_w"], weights["fc_b"], weights["att_diag"]
+    fc_w, diag = weights["fc_w"], weights["att_diag"]
     B = len(labels)
 
-    rep, cache = encoder_forward_train(
-        token, pos1, pos2, weights, mask=mask,
-        bert_dropout_p=bert_dropout_p, rng=rng,
+    rep, rep_d, enc_mask, cache = _encode_train(
+        token, pos1, pos2, weights, mask, dropout_p, bert_dropout_p, rng
     )
-    # the per-sentence dropout models the CNN/PCNN encoder's trailing
-    # self.drop (cnn_encoder.py:65); BERT encoders have no trailing
-    # dropout (bert_encoder.py:23-33), so only later sites apply there
-    enc_mask = (
-        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-        if "conv_w" in weights else None
-    )
-    rep_d = rep * enc_mask if enc_mask is not None else rep
 
     # attention per bag (train branch): query = gold label
     att_mats = fc_w[labels] * diag[None, :]  # (B, H)
@@ -555,23 +598,11 @@ def bag_att_train_batch(
 
     bag_mask = _dropout_mask(bag_rep.shape, dropout_p, rng, bag_rep.dtype)
     bag_rep_d = bag_rep * bag_mask if bag_mask is not None else bag_rep
-    logits = bag_rep_d @ fc_w.T + fc_b
-
-    loss_wsum, w_sum, d_logits = ce_loss_and_dlogits(
-        logits, labels, class_weights
-    )
-    pred = logits.argmax(axis=-1)
-    n_correct = int((pred == labels).sum())
-    pos = labels != 0
-    n_pos = int(pos.sum())
-    n_pos_correct = int(((pred == labels) & pos).sum())
-
-    grads = zero_grads(weights)
     # fc consumes bag_rep_d both as input and (rows indexed by label)
     # as the attention query matrix
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ bag_rep_d.astype(np.float64)
-    d_bag_rep_d = d_logits @ fc_w.astype(np.float64)  # (B, H)
+    stats, grads, d_bag_rep_d = _softmax_ce_head(
+        bag_rep_d, labels, weights, class_weights
+    )
     d_bag_rep = (
         d_bag_rep_d * bag_mask if bag_mask is not None else d_bag_rep_d
     )
@@ -597,7 +628,7 @@ def bag_att_train_batch(
     if enc_mask is not None:
         d_rep_d *= enc_mask
     encoder_backward(d_rep_d, cache, weights, grads)
-    return loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads
+    return (*stats, grads)
 
 
 def bag_avg_train_batch(
@@ -608,42 +639,20 @@ def bag_avg_train_batch(
     """BagAverage train branch (bag_average.py:117-131): bag rep = mean
     of member reps -> dropout -> fc -> CE. Same SUM-form contract and
     argument shapes as bag_att_train_batch."""
-    fc_w, fc_b = weights["fc_w"], weights["fc_b"]
     B = len(labels)
-    rep, cache = encoder_forward_train(
-        token, pos1, pos2, weights, mask=mask,
-        bert_dropout_p=bert_dropout_p, rng=rng,
+    rep, rep_d, enc_mask, cache = _encode_train(
+        token, pos1, pos2, weights, mask, dropout_p, bert_dropout_p, rng
     )
-    # the per-sentence dropout models the CNN/PCNN encoder's trailing
-    # self.drop (cnn_encoder.py:65); BERT encoders have no trailing
-    # dropout (bert_encoder.py:23-33), so only later sites apply there
-    enc_mask = (
-        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-        if "conv_w" in weights else None
-    )
-    rep_d = rep * enc_mask if enc_mask is not None else rep
 
-    bag_rep = np.empty((B, fc_w.shape[1]), dtype=rep.dtype)
+    bag_rep = np.empty((B, rep.shape[1]), dtype=rep.dtype)
     for i in range(B):
         lo, hi = scopes[i]
         bag_rep[i] = rep_d[lo:hi].mean(axis=0)
     bag_mask = _dropout_mask(bag_rep.shape, dropout_p, rng, bag_rep.dtype)
     bag_rep_d = bag_rep * bag_mask if bag_mask is not None else bag_rep
-    logits = bag_rep_d @ fc_w.T + fc_b
-
-    loss_wsum, w_sum, d_logits = ce_loss_and_dlogits(
-        logits, labels, class_weights
+    stats, grads, d_bag_rep_d = _softmax_ce_head(
+        bag_rep_d, labels, weights, class_weights
     )
-    pred = logits.argmax(axis=-1)
-    n_correct = int((pred == labels).sum())
-    pos = labels != 0
-    n_pos = int(pos.sum())
-    n_pos_correct = int(((pred == labels) & pos).sum())
-
-    grads = zero_grads(weights)
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ bag_rep_d.astype(np.float64)
-    d_bag_rep_d = d_logits @ fc_w.astype(np.float64)
     d_bag_rep = (
         d_bag_rep_d * bag_mask if bag_mask is not None else d_bag_rep_d
     )
@@ -654,7 +663,7 @@ def bag_avg_train_batch(
     if enc_mask is not None:
         d_rep_d *= enc_mask
     encoder_backward(d_rep_d, cache, weights, grads)
-    return loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads
+    return (*stats, grads)
 
 
 def bag_one_train_batch(
@@ -669,18 +678,9 @@ def bag_one_train_batch(
     the bag rep is that member's rep -> dropout -> fc -> CE."""
     fc_w, fc_b = weights["fc_w"], weights["fc_b"]
     B = len(labels)
-    rep, cache = encoder_forward_train(
-        token, pos1, pos2, weights, mask=mask,
-        bert_dropout_p=bert_dropout_p, rng=rng,
+    rep, rep_d, enc_mask, cache = _encode_train(
+        token, pos1, pos2, weights, mask, dropout_p, bert_dropout_p, rng
     )
-    # the per-sentence dropout models the CNN/PCNN encoder's trailing
-    # self.drop (cnn_encoder.py:65); BERT encoders have no trailing
-    # dropout (bert_encoder.py:23-33), so only later sites apply there
-    enc_mask = (
-        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-        if "conv_w" in weights else None
-    )
-    rep_d = rep * enc_mask if enc_mask is not None else rep
 
     inst_logits = rep_d @ fc_w.T + fc_b  # (nsum, N), selection only
     inst_prob = np.exp(_log_softmax(inst_logits))
@@ -691,21 +691,9 @@ def bag_one_train_batch(
     bag_rep = rep_d[sel]
     bag_mask = _dropout_mask(bag_rep.shape, dropout_p, rng, bag_rep.dtype)
     bag_rep_d = bag_rep * bag_mask if bag_mask is not None else bag_rep
-    logits = bag_rep_d @ fc_w.T + fc_b
-
-    loss_wsum, w_sum, d_logits = ce_loss_and_dlogits(
-        logits, labels, class_weights
+    stats, grads, d_bag_rep_d = _softmax_ce_head(
+        bag_rep_d, labels, weights, class_weights
     )
-    pred = logits.argmax(axis=-1)
-    n_correct = int((pred == labels).sum())
-    pos = labels != 0
-    n_pos = int(pos.sum())
-    n_pos_correct = int(((pred == labels) & pos).sum())
-
-    grads = zero_grads(weights)
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ bag_rep_d.astype(np.float64)
-    d_bag_rep_d = d_logits @ fc_w.astype(np.float64)
     d_bag_rep = (
         d_bag_rep_d * bag_mask if bag_mask is not None else d_bag_rep_d
     )
@@ -714,7 +702,7 @@ def bag_one_train_batch(
     if enc_mask is not None:
         d_rep_d *= enc_mask
     encoder_backward(d_rep_d, cache, weights, grads)
-    return loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads
+    return (*stats, grads)
 
 
 BAG_TRAIN_KERNELS = {
@@ -738,44 +726,27 @@ def sentence_train_batch(
     sentence path applies dropout TWICE with independent masks: once at
     the end of the encoder (cnn_encoder.py:65 self.drop(x)) and once in
     the classifier (softmax_nn.py:48 self.drop(rep)) — effective keep
-    probability (1-p)^2, mirrored here. Same partial-composable SUM
-    contract as bag_att_train_batch; returns
+    probability (1-p)^2, mirrored here. BERT weights (BERTEncoder /
+    BERTEntityEncoder -> SoftmaxNN, sentence_re.py:104-127) have no
+    encoder dropout, so the classifier's is the only `dropout_p` site;
+    `mask` is then the attention mask and pos1/pos2 the entity-marker
+    positions. Same partial-composable SUM contract as
+    bag_att_train_batch; returns
     (loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads)."""
-    fc_w, fc_b = weights["fc_w"], weights["fc_b"]
-    rep, cache = encoder_forward_train(
-        token, pos1, pos2, weights, mask=mask,
-        bert_dropout_p=bert_dropout_p, rng=rng,
+    rep, rep_d, enc_mask, cache = _encode_train(
+        token, pos1, pos2, weights, mask, dropout_p, bert_dropout_p, rng
     )
-    # the per-sentence dropout models the CNN/PCNN encoder's trailing
-    # self.drop (cnn_encoder.py:65); BERT encoders have no trailing
-    # dropout (bert_encoder.py:23-33), so only later sites apply there
-    enc_mask = (
-        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-        if "conv_w" in weights else None
-    )
-    rep_d = rep * enc_mask if enc_mask is not None else rep
     cls_mask = _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
     rep_dd = rep_d * cls_mask if cls_mask is not None else rep_d
-    logits = rep_dd @ fc_w.T + fc_b
-    loss_wsum, w_sum, d_logits = ce_loss_and_dlogits(
-        logits, labels, class_weights
+    stats, grads, d_rep = _softmax_ce_head(
+        rep_dd, labels, weights, class_weights
     )
-    pred = logits.argmax(axis=-1)
-    n_correct = int((pred == labels).sum())
-    pos = labels != 0
-    n_pos = int(pos.sum())
-    n_pos_correct = int(((pred == labels) & pos).sum())
-
-    grads = zero_grads(weights)
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ rep_dd.astype(np.float64)
-    d_rep = d_logits @ fc_w.astype(np.float64)
     if cls_mask is not None:
         d_rep *= cls_mask
     if enc_mask is not None:
         d_rep *= enc_mask
     encoder_backward(d_rep, cache, weights, grads)
-    return loss_wsum, w_sum, n_correct, n_pos, n_pos_correct, grads
+    return (*stats, grads)
 
 
 # ---------------------------------------------------------------------------
@@ -816,15 +787,9 @@ def multilabel_sentence_train_batch(
     BERT weights use it as the attention mask (no trailing dropout).
     Same SUM-form partial-composable contract; w_sum counts ELEMENTS."""
     fc_w, fc_b = weights["fc_w"], weights["fc_b"]
-    rep, cache = encoder_forward_train(
-        token, pos1, pos2, weights, mask=mask,
-        bert_dropout_p=bert_dropout_p, rng=rng,
+    rep, rep_d, enc_mask, cache = _encode_train(
+        token, pos1, pos2, weights, mask, dropout_p, bert_dropout_p, rng
     )
-    enc_mask = (
-        _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
-        if "conv_w" in weights else None
-    )
-    rep_d = rep * enc_mask if enc_mask is not None else rep
     cls_mask = _dropout_mask(rep.shape, dropout_p, rng, rep.dtype)
     rep_dd = rep_d * cls_mask if cls_mask is not None else rep_d
     logits = rep_dd @ fc_w.T + fc_b
@@ -837,17 +802,13 @@ def multilabel_sentence_train_batch(
     sig = 1.0 / (1.0 + np.exp(-logits[:, 1:].astype(np.float64)))
     pred = (sig >= 0.5).astype(np.int64)
     y1 = onehot[:, 1:].astype(np.int64)
-    n = float(pred.size)
     n_correct = float((pred == y1).sum())
     n_pos = float(y1.sum())
     n_pos_correct = float(((pred == 1) & (y1 == 1)).sum())
 
     d_logits = np.zeros((B, N), dtype=np.float64)
     d_logits[:, 1:] = d_z
-    grads = zero_grads(weights)
-    grads["fc_b"] += d_logits.sum(axis=0)
-    grads["fc_w"] += d_logits.T @ rep_dd.astype(np.float64)
-    d_rep = d_logits @ fc_w.astype(np.float64)
+    grads, d_rep = _fc_backward(d_logits, rep_dd, weights)
     if cls_mask is not None:
         d_rep *= cls_mask
     if enc_mask is not None:

@@ -101,10 +101,11 @@ def _stacked_conv_weights(cw: np.ndarray, cb: np.ndarray) -> np.ndarray:
 # for the two (2L)-row position tables. The per-row conv then collapses
 # from an im2col GEMM (2*Lc*(K*C+1)*H FLOPs/row) to 3K row-gathers +
 # adds (~20x fewer ops at the reference dims). Gated by table size: the
-# gathers only win while the tables stay cache-resident (word table is
-# V*K*H floats), so vocabularies past _PROJ_MAX_BYTES keep the blocked
-# im2col GEMM — the right algorithm for a 400k-row GloVe vocab, where
-# the projected table would be ~1 GB per worker process.
+# gathers only win while the tables stay cache-resident (the three
+# tables are (V + 2 * pos_rows) * K * H floats), so vocabularies past
+# _PROJ_MAX_BYTES keep the blocked im2col GEMM — the right algorithm
+# for a 400k-row GloVe vocab, where the projected table would be ~1 GB
+# per worker process.
 #
 # Numerics: the reduction order changes (per-table partial dot products
 # summed pairwise instead of one fused K*C+1 dot) — measured max delta
@@ -119,9 +120,12 @@ _PROJ_CACHE: dict = {}
 
 
 def _projected_tables(weights: dict):
-    """(Pw, Pp1, Pp2) each (K, rows, H) float32, or None when the word
-    table would blow the cache gate. Cached per weight set (strong ref
-    pins the key array, same pattern as _WB_CACHE)."""
+    """(Pw, Pp1, Pp2) each (K, rows, H) float32, or None when the three
+    tables together would blow the _PROJ_MAX_BYTES gate. Cached per
+    weight set (strong ref pins the key arrays, same pattern as
+    _WB_CACHE); the cache's total table bytes stay within the same
+    bound — oldest weight set evicted first — so a long-lived executor
+    cycling weight sets pins at most one gate's worth."""
     cw = weights["conv_w"]
     we, p1e, p2e = weights["word_emb"], weights["pos1_emb"], weights["pos2_emb"]
     # the tables derive from all FOUR source arrays — pin each identity
@@ -133,22 +137,23 @@ def _projected_tables(weights: dict):
     if e is not None and all(a is b for a, b in zip(e[0], srcs)):
         return e[1]
     H, C, K = cw.shape
-    V = we.shape[0]
-    if V * K * H * 4 > _PROJ_MAX_BYTES:
-        tables = None
-    else:
-        wsz = we.shape[1]
-        psz = p1e.shape[1]
-        Pw = np.empty((K, V, H), dtype=np.float32)
-        Pp1 = np.empty((K, p1e.shape[0], H), dtype=np.float32)
-        Pp2 = np.empty((K, p2e.shape[0], H), dtype=np.float32)
-        for k in range(K):
-            Pw[k] = we @ cw[:, :wsz, k].T
-            Pp1[k] = p1e @ cw[:, wsz : wsz + psz, k].T
-            Pp2[k] = p2e @ cw[:, wsz + psz :, k].T
-        tables = (Pw, Pp1, Pp2)
-    if len(_PROJ_CACHE) >= 16:
-        _PROJ_CACHE.clear()
+    nbytes = (we.shape[0] + p1e.shape[0] + p2e.shape[0]) * K * H * 4
+    if nbytes > _PROJ_MAX_BYTES:
+        return None
+    wsz = we.shape[1]
+    psz = p1e.shape[1]
+    Pw = np.empty((K, we.shape[0], H), dtype=np.float32)
+    Pp1 = np.empty((K, p1e.shape[0], H), dtype=np.float32)
+    Pp2 = np.empty((K, p2e.shape[0], H), dtype=np.float32)
+    for k in range(K):
+        Pw[k] = we @ cw[:, :wsz, k].T
+        Pp1[k] = p1e @ cw[:, wsz : wsz + psz, k].T
+        Pp2[k] = p2e @ cw[:, wsz + psz :, k].T
+    while _PROJ_CACHE and nbytes + sum(
+        t.nbytes for _, tables in _PROJ_CACHE.values() for t in tables
+    ) > _PROJ_MAX_BYTES:
+        del _PROJ_CACHE[next(iter(_PROJ_CACHE))]
+    tables = (Pw, Pp1, Pp2)
     _PROJ_CACHE[key] = (srcs, tables)
     return tables
 

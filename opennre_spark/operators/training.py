@@ -1,33 +1,45 @@
 """Distributed training (SURVEY.md §2 A3 + the train loops): synchronous
-data-parallel SGD for the bag-attention and sentence models, re-expressing
-`BagRE.train_model` (/root/reference/opennre/framework/bag_re.py:100-152)
-and `SentenceRE.train_model` (sentence_re.py:96-139) in Spark.
+data-parallel SGD for the bag, sentence and multi-label sentence
+models, re-expressing the reference's `BagRE.train_model`
+(opennre/framework/bag_re.py:100-152),
+`SentenceRE.train_model` (sentence_re.py:96-139) and
+`MultiLabelSentenceRE.train_model` (multi_label_sentence_re.py:96-136)
+in Spark. The reference keeps one loop per framework; here one optimizer
+step is the same dataflow whatever the model, so ONE driver loop
+(`_train_loop`) and ONE per-partition partial kernel (`_partials`) serve
+`train_bag_attention` and `train_sentence_model` (multilabel=True
+included). The callers differ only in the table they train over (bags or
+instances), how a partition is cut into kernel calls
+(`_bag_micro_batches` / `_sentence_micro_batches`), and how an epoch is
+validated.
 
 Shape (the classic Spark parameter-server-less pattern, MLlib-style):
   1. label + encode instances ONCE (distant supervision join + one
-     mapInArrow tokenize/encode pass) and assemble train bags keyed by
-     the gold fact (h_id, t_id, label) — `entpair_as_bag=False`
-     training semantics (data_loader.py:166-168);
-  2. localCheckpoint the assembled bag table (training iterates many
-     steps over it — the lineage must not re-run mention detection
-     every step);
+     mapInArrow tokenize/encode pass); the bag model assembles train
+     bags keyed by the gold fact (h_id, t_id, label) —
+     `entpair_as_bag=False` training semantics (data_loader.py:166-168);
+  2. localCheckpoint the table (training iterates many steps over it —
+     the lineage must not re-run mention detection every step);
   3. per optimizer step: broadcast the current weights, compute
      per-partition gradient PARTIALS with one mapInPandas pass
      (functions/grad_kernels — SUM-form gradients compose exactly),
-     sum the <= n_partitions partial rows on the driver, apply the SGD
-     update (p -= lr * (g/w_sum + wd * p)), update the AverageMeter
-     stats exactly like the reference's per-step meter updates.
+     sum the <= n_partitions partial rows on the driver, apply the
+     optimizer update (sgd: p -= lr * (g/w_sum + wd * p)), update the
+     AverageMeter stats exactly like the reference's per-step meter
+     updates; per epoch: the history row, validation with the
+     best-checkpoint save, and the resume checkpoint.
 
-Batch schedule: the reference shuffles bags into fixed-size batches
-each epoch (DataLoader shuffle=True — nondeterministic). Here each
-epoch assigns `batch = xxhash64(bag_key, epoch_seed) mod n_batches` —
+Batch schedule: the reference shuffles bags (or sentences) into
+fixed-size batches each epoch (DataLoader shuffle=True —
+nondeterministic). Here each epoch assigns
+`batch = xxhash64(row_key, epoch_seed) mod n_batches` —
 deterministic under any partitioning, no global sort/window at scale;
 batch sizes are Poisson(batch_size) rather than exactly fixed
 (documented delta, same expectation; SURVEY.md §7 determinism contract).
 
 Scale notes (100 TB): the gradient partial is MODEL-sized, independent
 of corpus size, and one row per partition crosses the wire per step —
-a step costs one scan of the localCheckpointed bag TABLE (the batch
+a step costs one scan of the localCheckpointed TABLE (the batch
 filter is evaluated during the scan, so an epoch reads the table
 n_batches times; docs/PERFORMANCE.md discusses why large-batch sync
 SGD — few steps per epoch — is the 100 TB operating point) + a driver
@@ -44,7 +56,13 @@ cluster width — numerically identical, pytest-checked.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import json
 import math
+import os
+import re
+import tempfile
 
 import numpy as np
 import pandas as pd
@@ -54,6 +72,7 @@ from pyspark.sql import types as T
 
 from .. import config, relations
 from ..functions import grad_kernels as gk
+from ..functions.weights import load_state_dict_npz, save_weights_npz
 from .bags import _SORT_COLS, resize_bag
 from .candidates import candidate_pairs
 from .mentions import detect_mentions
@@ -63,6 +82,7 @@ _PARTIAL_SCHEMA = (
     "n_pos double, n_pos_correct double, grad array<double>, "
     "word_idx array<bigint>, word_grad array<double>"
 )
+_STAT_KEYS = ("loss_wsum", "w_sum", "n", "n_correct", "n_pos", "n_pos_correct")
 
 
 def _materialize(df: DataFrame, mode: str) -> DataFrame:
@@ -108,8 +128,7 @@ def tree_combine(partials_df: DataFrame, fanin: int) -> DataFrame:
     def combine(pdf: pd.DataFrame) -> pd.DataFrame:
         rest = None
         widx_all, wval_all = [], []
-        sums = {k: 0.0 for k in ("loss_wsum", "w_sum", "n", "n_correct",
-                                 "n_pos", "n_pos_correct")}
+        sums = {k: 0.0 for k in _STAT_KEYS}
         for _, r in pdf.iterrows():
             for k in sums:
                 sums[k] += float(r[k])
@@ -140,11 +159,7 @@ def _reduce_partials(partials, weights):
     of the non-embedding block, scatter-add of the sparse-transported
     word-embedding rows (gk.split_word_grad). Returns (stats dict,
     flattened full gradient SUM)."""
-    stats = {
-        k: sum(r[k] for r in partials)
-        for k in ("loss_wsum", "w_sum", "n", "n_correct", "n_pos",
-                  "n_pos_correct")
-    }
+    stats = {k: sum(r[k] for r in partials) for k in _STAT_KEYS}
     rest = None
     word = np.zeros(weights["word_emb"].shape, dtype=np.float64)
     for r in partials:
@@ -362,111 +377,151 @@ def sentence_batch_col(epoch: int, n_batches: int, seed: int,
     ).cast("int")
 
 
-def _bag_partials(
-    weights_bc, class_weights, dropout_p: float, bag_size: int, bag_seed: int,
-    sort_cols: list[str], salt: tuple = (0, 0, 0), method: str = "att",
-    bert_dropout_p: float = 0.0,
-):
+def _partials(weights_bc, salt: tuple, micro_batches):
     """mapInPandas kernel: ONE partial row per partition with SUM-form
-    gradients + meter numerators (grad_kernels contract). dropout_p > 0
-    seeds a per-(seed, epoch, step, partition) Generator — the full
-    tuple is the seed, so no two steps ever share a stream
-    (deterministic given the schedule; a different stream than torch's,
-    documented delta). The bag_size resize is salted per (epoch, step)
-    too: a bag is visited once per epoch, so this reproduces the
-    reference's resample-per-visit semantics deterministically
-    (data_loader.py:185-190 uses process-global randomness)."""
-    resize_salt = (bag_seed * 1_000_003 + salt[1]) * 1_000_003 + salt[2]
+    gradients + meter numerators (grad_kernels contract).
+    `micro_batches(batches, weights, micro, rng, salt)` cuts the
+    partition into kernel calls of about `micro` sentences and yields
+    one (loss_wsum, w_sum, n, n_correct, n_pos, n_pos_correct, grads)
+    per call. The Generator is seeded per (seed, epoch, step,
+    partition) — the full tuple is the seed, so no two steps ever share
+    a stream (deterministic given the schedule; a different stream than
+    torch's, documented delta) — and is drawn from only at dropout > 0."""
 
     def run(batches):
+        from pyspark import TaskContext
+
         weights = weights_bc.value
         micro = (
             _BERT_TRAIN_MICRO_SENTS if "conv_w" not in weights
             else _TRAIN_MICRO_SENTS
         )
-        rng = None
-        if dropout_p > 0 or bert_dropout_p > 0:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            rng = np.random.default_rng((*salt, pid))
+        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
+        rng = np.random.default_rng((*salt, pid))
         acc = None
-        loss_wsum = w_sum = n = n_correct = n_pos = n_pos_correct = 0.0
-
-        def flush(tok_list, scope_list, labels):
-            nonlocal acc, loss_wsum, w_sum, n, n_correct, n_pos, n_pos_correct
-            if not labels:
-                return
-            token = np.concatenate([t[0] for t in tok_list])
-            pos1 = np.concatenate([t[1] for t in tok_list])
-            pos2 = np.concatenate([t[2] for t in tok_list])
-            mask = (
-                np.concatenate([t[3] for t in tok_list])
-                if tok_list[0][3] is not None else None
-            )
-            lw, ws, nc, npos, npc, grads = gk.BAG_TRAIN_KERNELS[method](
-                token, pos1, pos2,
-                np.asarray(scope_list, dtype=np.int64),
-                np.asarray(labels, dtype=np.int64),
-                weights, class_weights=class_weights, dropout_p=dropout_p,
-                rng=rng, mask=mask, bert_dropout_p=bert_dropout_p,
-            )
-            loss_wsum += lw
-            w_sum += ws
-            n += len(labels)
-            n_correct += nc
-            n_pos += npos
-            n_pos_correct += npc
+        sums = [0.0] * len(_STAT_KEYS)
+        for *stats, grads in micro_batches(batches, weights, micro, rng, salt):
+            sums = [s + v for s, v in zip(sums, stats)]
             g = gk.flatten_grads(grads, weights)
             acc = g if acc is None else acc + g
-
-        tok_list, scope_list, labels, n_sents = [], [], [], 0
-        for pdf in batches:
-            for h, t, lab, members in zip(
-                pdf["h_id"], pdf["t_id"], pdf["label_id"], pdf["members"]
-            ):
-                members = sorted(
-                    members, key=lambda m: tuple(m[c] for c in sort_cols)
-                )
-                has_mask = "mask" in members[0]  # arrow struct -> dict
-                cols = {
-                    "token": [np.asarray(m["token"]) for m in members],
-                    "pos1": [np.asarray(m["pos1"]) for m in members],
-                    "pos2": [np.asarray(m["pos2"]) for m in members],
-                }
-                if has_mask:
-                    cols["mask"] = [np.asarray(m["mask"]) for m in members]
-                sub = pd.DataFrame(cols)
-                if bag_size > 0:
-                    sub = resize_bag(sub, bag_size, h, t, resize_salt)
-                k = len(sub)
-                tok_list.append(
-                    (
-                        np.stack(sub["token"].tolist()),
-                        np.stack(sub["pos1"].tolist()),
-                        np.stack(sub["pos2"].tolist()),
-                        np.stack(sub["mask"].tolist()) if has_mask else None,
-                    )
-                )
-                scope_list.append((n_sents, n_sents + k))
-                labels.append(int(lab))
-                n_sents += k
-                if n_sents >= micro:
-                    flush(tok_list, scope_list, labels)
-                    tok_list, scope_list, labels, n_sents = [], [], [], 0
-        flush(tok_list, scope_list, labels)
         if acc is not None:
             widx, wvals, rest = gk.split_word_grad(acc, weights)
             yield pd.DataFrame(
                 {
-                    "loss_wsum": [loss_wsum], "w_sum": [w_sum], "n": [n],
-                    "n_correct": [n_correct], "n_pos": [n_pos],
-                    "n_pos_correct": [n_pos_correct], "grad": [rest],
-                    "word_idx": [widx], "word_grad": [wvals],
+                    **{k: [v] for k, v in zip(_STAT_KEYS, sums)},
+                    "grad": [rest], "word_idx": [widx], "word_grad": [wvals],
                 }
             )
 
     return run
+
+
+def _bag_micro_batches(
+    batches, weights, micro, rng, salt, *, class_weights, dropout_p: float,
+    bert_dropout_p: float, bag_size: int, sort_cols: list[str], method: str,
+):
+    """Bag rows -> bag-model kernel calls: whole bags (members in the
+    stable order, concatenated with [begin, end) scopes) until a call
+    holds `micro` sentences. The bag_size resize is salted per
+    (seed, epoch, step): a bag is visited once per epoch, so this
+    reproduces the reference's resample-per-visit semantics
+    deterministically (data_loader.py:185-190 uses process-global
+    randomness)."""
+    resize_salt = (salt[0] * 1_000_003 + salt[1]) * 1_000_003 + salt[2]
+
+    def call(tok_list, scope_list, labels):
+        token = np.concatenate([t[0] for t in tok_list])
+        pos1 = np.concatenate([t[1] for t in tok_list])
+        pos2 = np.concatenate([t[2] for t in tok_list])
+        mask = (
+            np.concatenate([t[3] for t in tok_list])
+            if tok_list[0][3] is not None else None
+        )
+        lw, ws, nc, npos, npc, grads = gk.BAG_TRAIN_KERNELS[method](
+            token, pos1, pos2,
+            np.asarray(scope_list, dtype=np.int64),
+            np.asarray(labels, dtype=np.int64),
+            weights, class_weights=class_weights, dropout_p=dropout_p,
+            rng=rng, mask=mask, bert_dropout_p=bert_dropout_p,
+        )
+        return lw, ws, len(labels), nc, npos, npc, grads
+
+    tok_list, scope_list, labels, n_sents = [], [], [], 0
+    for pdf in batches:
+        for h, t, lab, members in zip(
+            pdf["h_id"], pdf["t_id"], pdf["label_id"], pdf["members"]
+        ):
+            members = sorted(
+                members, key=lambda m: tuple(m[c] for c in sort_cols)
+            )
+            has_mask = "mask" in members[0]  # arrow struct -> dict
+            cols = {
+                "token": [np.asarray(m["token"]) for m in members],
+                "pos1": [np.asarray(m["pos1"]) for m in members],
+                "pos2": [np.asarray(m["pos2"]) for m in members],
+            }
+            if has_mask:
+                cols["mask"] = [np.asarray(m["mask"]) for m in members]
+            sub = pd.DataFrame(cols)
+            if bag_size > 0:
+                sub = resize_bag(sub, bag_size, h, t, resize_salt)
+            k = len(sub)
+            tok_list.append(
+                (
+                    np.stack(sub["token"].tolist()),
+                    np.stack(sub["pos1"].tolist()),
+                    np.stack(sub["pos2"].tolist()),
+                    np.stack(sub["mask"].tolist()) if has_mask else None,
+                )
+            )
+            scope_list.append((n_sents, n_sents + k))
+            labels.append(int(lab))
+            n_sents += k
+            if n_sents >= micro:
+                yield call(tok_list, scope_list, labels)
+                tok_list, scope_list, labels, n_sents = [], [], [], 0
+    if labels:
+        yield call(tok_list, scope_list, labels)
+
+
+def _sentence_micro_batches(
+    batches, weights, micro, rng, salt, *, class_weights, dropout_p: float,
+    bert_dropout_p: float, multilabel: bool,
+):
+    """Instance rows -> sentence-model kernel calls of `micro` rows.
+    Every encoder family runs the same kernel: for BERT weights the
+    mask column is the attention mask and pos1/pos2 are the (B, 1)
+    entity-marker positions (encoder_forward_train's dispatch)."""
+    for pdf in batches:
+        for lo in range(0, len(pdf), micro):
+            sub = pdf.iloc[lo : lo + micro]
+            token = np.stack([np.asarray(t) for t in sub["token"]])
+            pos1 = np.stack([np.asarray(t) for t in sub["pos1"]])
+            pos2 = np.stack([np.asarray(t) for t in sub["pos2"]])
+            mask = (
+                np.stack([np.asarray(t) for t in sub["mask"]])
+                if "mask" in sub.columns else None
+            )
+            labels = sub["label_id"].to_numpy(dtype=np.int64)
+            if multilabel:
+                # SigmoidNN + BCE (multi_label_sentence_re.py)
+                lw, ws, nc, npos, npc, grads = (
+                    gk.multilabel_sentence_train_batch(
+                        token, pos1, pos2, labels, weights,
+                        dropout_p=dropout_p, rng=rng, mask=mask,
+                        bert_dropout_p=bert_dropout_p,
+                    )
+                )
+            else:
+                lw, ws, nc, npos, npc, grads = gk.sentence_train_batch(
+                    token, pos1, pos2, labels, weights,
+                    class_weights=class_weights, dropout_p=dropout_p,
+                    rng=rng, mask=mask, bert_dropout_p=bert_dropout_p,
+                )
+            # the multilabel meter denominator is ELEMENTS
+            # (B * (N-1), multi_label_sentence_re.py:124), not rows
+            n = ws if multilabel else len(labels)
+            yield lw, ws, n, nc, npos, npc, grads
 
 
 def make_optimizer(opt: str, weights: dict, lr: float, weight_decay: float,
@@ -519,12 +574,6 @@ def _save_train_epoch(resume_dir: str, epoch: int, weights: dict,
     optimizer moments when present, and an epoch manifest written LAST
     via atomic rename — a torn run never leaves a manifest without its
     arrays, so resume only ever sees complete epochs."""
-    import json
-    import os
-
-    from .. import relations
-    from ..functions.weights import save_weights_npz
-
     os.makedirs(resume_dir, exist_ok=True)
     save_weights_npz(
         weights, os.path.join(resume_dir, f"weights_{epoch}.npz"),
@@ -548,13 +597,6 @@ def _save_train_epoch(resume_dir: str, epoch: int, weights: dict,
 def _load_train_state(resume_dir: str, schema: str):
     """(next_epoch, weights-or-None, opt_state-or-None, history rows) —
     resumes from the highest complete epoch manifest."""
-    import json
-    import os
-    import re
-
-    from ..functions.weights import load_state_dict_npz
-    from .. import relations
-
     if not os.path.isdir(resume_dir):
         return 0, None, None, []
     done = sorted(
@@ -586,6 +628,24 @@ def _load_train_state(resume_dir: str, schema: str):
     return last + 1, weights, opt_state, history
 
 
+@contextlib.contextmanager
+def _temp_ckpt(weights: dict, rel2id: dict, tmp_dir: str | None):
+    """In-memory weights as a temporary .npz checkpoint (removed on
+    exit), so validation runs the PRODUCTION scoring path that loads
+    checkpoints by path. Executors read the path: on a multi-node
+    cluster `tmp_dir` MUST be shared storage (NFS/fuse mount) — the
+    default (the driver's tempfile dir) is only correct in local mode."""
+    fd, path = tempfile.mkstemp(
+        suffix=".npz", prefix="spark_graft_val_", dir=tmp_dir
+    )
+    os.close(fd)
+    try:
+        save_weights_npz(weights, path, rel2id=rel2id)
+        yield path
+    finally:
+        os.remove(path)
+
+
 def evaluate_bag_model(
     val_instances: DataFrame,
     val_facts: DataFrame,
@@ -605,30 +665,18 @@ def evaluate_bag_model(
     metrics.bag_eval), so training-time validation exercises exactly
     the code a later inference run will.
 
-    tmp_dir: where the temporary checkpoint lands. Executors read this
-    path, so on a real multi-node cluster it MUST be shared storage
-    (NFS/fuse mount) — the default (the driver's tempfile dir) is only
-    correct in local mode. Train loops thread their `val_tmp_dir`
-    through here.
+    tmp_dir: where the temporary checkpoint lands (see _temp_ckpt —
+    shared storage on a multi-node cluster). Train loops thread their
+    `val_tmp_dir` through here.
 
     val_facts: gold (h_id, relation, t_id) rows. Returns the bag_eval
     dict (auc, max_micro_f1, p@k, ...)."""
-    import os
-    import tempfile
-
-    from .. import relations
-    from ..functions.weights import save_weights_npz
     from .bags import bag_scores_fused, explode_bag_scores
     from .metrics import bag_eval
 
     rel2id = relations.rel2id_for(schema)
     id2rel = {v: k for k, v in rel2id.items()}
-    fd, path = tempfile.mkstemp(
-        suffix=".npz", prefix="spark_graft_val_", dir=tmp_dir
-    )
-    os.close(fd)
-    try:
-        save_weights_npz(weights, path, rel2id=rel2id)
+    with _temp_ckpt(weights, rel2id, tmp_dir) as path:
         bags = bag_scores_fused(
             val_instances, method=method, bag_cap=bag_cap, bag_size=bag_size,
             schema=schema, encoder=encoder, ckpt=path,
@@ -638,8 +686,6 @@ def evaluate_bag_model(
         )
         facts = val_facts.select("h_id", "t_id", "relation")
         return bag_eval(preds, facts, threshold=threshold)
-    finally:
-        os.remove(path)
 
 
 def evaluate_sentence_acc(
@@ -650,21 +696,10 @@ def evaluate_sentence_acc(
     prediction vs gold label over labeled val instances, through the
     production scoring path with a temp checkpoint (tmp_dir: must be
     executor-visible shared storage on a multi-node cluster — see
-    evaluate_bag_model)."""
-    import os
-    import tempfile
-
-    from .. import relations
-    from ..functions.weights import save_weights_npz
+    _temp_ckpt)."""
     from .scoring import score_instances
 
-    rel2id = relations.rel2id_for(schema)
-    fd, path = tempfile.mkstemp(
-        suffix=".npz", prefix="spark_graft_val_", dir=tmp_dir
-    )
-    os.close(fd)
-    try:
-        save_weights_npz(weights, path, rel2id=rel2id)
+    with _temp_ckpt(weights, relations.rel2id_for(schema), tmp_dir) as path:
         scored = score_instances(
             val_instances, schema=schema, encoder=encoder, ckpt=path
         )
@@ -675,8 +710,73 @@ def evaluate_sentence_acc(
             ).alias("ok"),
         ).first()
         return float(agg["ok"] or 0) / float(agg["n"]) if agg["n"] else 0.0
-    finally:
-        os.remove(path)
+
+
+def evaluate_multilabel(
+    val_instances: DataFrame,
+    weights: dict,
+    schema: str = "reduced",
+    encoder: str = "cnn",
+    threshold: float = config.SCORE_THRESHOLD,
+    tmp_dir: str | None = None,
+) -> dict:
+    """MultiLabelSentenceRE.eval_model (multi_label_sentence_re.py:
+    151-185) with in-memory weights, through the PRODUCTION sigmoid
+    scoring path + metrics.multilabel_sentence_eval (A10): per-sentence
+    sigmoid scores explode to (sent_id, relation, score, label) cells —
+    labels one-hot the instance's single label_id exactly like the
+    reference's train/val construction (multi_label_sentence_re.py:
+    117-120). Rows carrying a non-null `anno_relation_list` (the
+    NYT10m/Wiki20m manual-test shape, data_loader.py:393-397) instead
+    label every listed relation — the reference's per-row
+    `'anno_relation_list' in item` duck-typing, so single-label and
+    annotated rows mix in one table. Returns the multilabel eval dict
+    (acc, auc, micro/macro F1, p@k, ...)."""
+    from .metrics import multilabel_sentence_eval
+    from .scoring import score_instances
+
+    rel2id = relations.rel2id_for(schema)
+    with _temp_ckpt(weights, rel2id, tmp_dir) as path:
+        scored = score_instances(
+            val_instances, with_scores=True, classifier="sigmoid",
+            schema=schema, encoder=encoder, ckpt=path,
+        )
+        sort_cols = [c for c in _SORT_COLS if c in scored.columns]
+        spark = val_instances.sparkSession
+        rel_dim = spark.createDataFrame(
+            [(r, i) for r, i in sorted(rel2id.items())],
+            "relation string, rel_id int",
+        )
+        has_anno = "anno_relation_list" in scored.columns
+        anno_cols = ["anno_relation_list"] if has_anno else []
+        one_hot = (F.col("rel_id") == F.col("label_id")).cast("int")
+        label_col = (
+            F.when(
+                F.col("anno_relation_list").isNotNull(),
+                F.array_contains(
+                    "anno_relation_list", F.col("relation")
+                ).cast("int"),
+            ).otherwise(one_hot)
+            if has_anno
+            else one_hot
+        )
+        cells = (
+            scored.withColumn(
+                "sent_id", F.xxhash64("h_id", "t_id", *sort_cols)
+            )
+            .select(
+                "sent_id", "label_id", *anno_cols,
+                F.posexplode("scores").alias("rel_id", "score"),
+            )
+            .join(F.broadcast(rel_dim), "rel_id")
+            .select(
+                "sent_id",
+                "relation",
+                F.col("score").cast("double").alias("score"),
+                label_col.alias("label"),
+            )
+        )
+        return multilabel_sentence_eval(cells, rel2id, threshold=threshold)
 
 
 def class_freq_weight_vector(encoded: DataFrame, n_rel: int) -> np.ndarray:
@@ -694,6 +794,148 @@ def class_freq_weight_vector(encoded: DataFrame, n_rel: int) -> np.ndarray:
         [counts.get(i, 0) + 1 for i in range(n_rel)], dtype=np.float64
     )
     return (1.0 / freq**0.05).astype(np.float32)
+
+
+def _initial_weights(init_weights: dict | None, encoder: str,
+                     schema: str) -> dict:
+    """A copy of `init_weights`, else the encoder's seed-frozen default
+    model — for BERT the reference's fine-tuning branch (BERT encoder
+    under SoftmaxNN or an att/avg/one bag model, example/
+    train_supervised_bert.py / train_bag_bert.py)."""
+    if init_weights is not None:
+        return dict(init_weights)
+    if encoder in ("bert", "bert_entity"):
+        from ..functions.bert_kernels import default_bert_model
+
+        _, w0 = default_bert_model(
+            entity=(encoder == "bert_entity"), schema=schema
+        )
+    else:
+        from ..functions.weights import default_model
+
+        _, w0 = default_model(schema=schema, pcnn=(encoder == "pcnn"))
+    return dict(w0)
+
+
+def _train_loop(
+    table: DataFrame, n_items: int, noun: str, weights: dict, batch_col,
+    micro_batches, validate, val_key: str, keep_diag: bool, *,
+    used_keys, schema: str, epochs: int, batch_size: int, lr: float,
+    weight_decay: float, opt: str, seed: int, warmup_step: int,
+    combine_fanin: int | None, resume_dir: str | None, ckpt: str | None,
+) -> tuple[dict, list[dict]]:
+    """The synchronous-SGD driver loop both train functions run over
+    their materialized `table` of `n_items` bags or instances (`noun`
+    names them in errors). Per epoch `batch_col(epoch, n_batches, seed)`
+    assigns every row a batch; per step the weights are broadcast, each
+    partition computes one SUM-form partial through `micro_batches`
+    (see _partials), the partials are (tree-)combined, collected and
+    reduced, and the optimizer steps at the warmup multiplier.
+
+    `validate(weights) -> float` (or None) runs after every epoch; the
+    value lands in the history row under `val_key` and a new best saves
+    `ckpt` (with the attention diag iff `keep_diag`). Without
+    `validate`, `ckpt` receives the final weights. `resume_dir` persists
+    every epoch and resumes from the last complete one."""
+    step_fn, opt_state = make_optimizer(
+        opt, weights, lr, weight_decay, used_keys=used_keys
+    )
+    best_metric = None
+    start_epoch = 0
+    history: list[dict] = []
+    if resume_dir is not None:
+        start_epoch, w_res, opt_res, history = _load_train_state(
+            resume_dir, schema
+        )
+        if w_res is not None:
+            weights = dict(w_res)  # incl. derived max_length/pcnn keys
+        if opt_res is not None and opt_state is not None:
+            opt_state.update(opt_res)
+        if validate is not None and history:
+            best = [h.get(val_key) for h in history
+                    if h.get(val_key) is not None]
+            best_metric = max(best) if best else None
+    n_batches = max(1, math.ceil(n_items / batch_size))
+    # reference schedule length: len(dataset) // batch_size * max_epoch
+    # (sentence_re.py:86 — floor, NOT epochs * n_batches; ADVICE r4)
+    total_steps = (n_items // batch_size) * epochs
+    if warmup_step > 0 and total_steps == 0:
+        # the reference's formula degenerates identically, but there it
+        # trains silently at lr-multiplier 0 forever; fail fast instead
+        raise ValueError(
+            f"warmup schedule has 0 total steps ({n_items} {noun} // "
+            f"batch_size {batch_size} * {epochs} epochs) — every "
+            "post-warmup step would run at lr 0; shrink batch_size or "
+            "disable warmup"
+        )
+    # reference global_step: completed optimizer steps only
+    # (sentence_re.py:97,124-128); resume rebuilds it from history
+    global_step = sum(int(h.get("n_steps", 0)) for h in history)
+    sc = table.sparkSession.sparkContext
+    rel2id = relations.rel2id_for(schema)
+    for epoch in range(start_epoch, epochs):
+        with_batch = table.withColumn(
+            "__batch", batch_col(epoch, n_batches, seed)
+        )
+        sums = {"loss": 0.0, "acc": 0.0, "pos_acc": 0.0}
+        n_steps = 0
+        for step in range(n_batches):
+            weights_bc = sc.broadcast(weights)
+            pdf = (
+                with_batch.filter(F.col("__batch") == F.lit(step))
+                .drop("__batch")
+                .mapInPandas(
+                    _partials(weights_bc, (seed, epoch, step), micro_batches),
+                    schema=_PARTIAL_SCHEMA,
+                )
+            )
+            if combine_fanin:
+                pdf = tree_combine(pdf, combine_fanin)
+            partials = pdf.collect()
+            weights_bc.destroy()
+            if not partials:
+                continue  # hash-mod batch came up empty this epoch
+            st, gsum = _reduce_partials(partials, weights)
+            w_sum = st["w_sum"]
+            lr_mult = (
+                gk.linear_warmup_multiplier(
+                    global_step, warmup_step, total_steps
+                )
+                if warmup_step > 0
+                else 1.0
+            )
+            weights = step_fn(
+                weights, gk.unflatten_grads(gsum / w_sum, weights), lr_mult
+            )
+            sums["loss"] += st["loss_wsum"] / w_sum
+            sums["acc"] += st["n_correct"] / st["n"]
+            sums["pos_acc"] += (
+                (st["n_pos_correct"] / st["n_pos"]) if st["n_pos"] > 0 else 0.0
+            )
+            n_steps += 1
+            global_step += 1
+        row = {
+            "epoch": epoch,
+            "n_steps": n_steps,
+            "global_step": global_step,
+            "avg_loss": sums["loss"] / max(n_steps, 1),
+            "avg_acc": sums["acc"] / max(n_steps, 1),
+            "avg_pos_acc": sums["pos_acc"] / max(n_steps, 1),
+        }
+        if validate is not None:
+            val = validate(weights)
+            row[val_key] = val
+            if best_metric is None or val > best_metric:
+                best_metric = val
+                if ckpt is not None:
+                    save_weights_npz(weights, ckpt, rel2id=rel2id,
+                                     keep_diag=keep_diag)
+        history.append(row)
+        if resume_dir is not None:
+            _save_train_epoch(resume_dir, epoch, weights, opt_state, row, schema)
+    if ckpt is not None and validate is None:
+        save_weights_npz(weights, ckpt, rel2id=rel2id, keep_diag=keep_diag)
+    return weights, history
 
 
 def train_bag_attention(
@@ -785,8 +1027,6 @@ def train_bag_attention(
     Returns (trained weight dict, per-epoch metric rows with the same
     AverageMeter semantics as the reference's progress bar: per-step
     batch-mean loss/acc/pos_acc averaged over the epoch's steps)."""
-    spark = instances.sparkSession
-    pcnn = encoder == "pcnn"
     if (val_instances is None) != (val_facts is None):
         raise ValueError(
             "val_instances and val_facts must be given together — "
@@ -794,25 +1034,7 @@ def train_bag_attention(
             "(a lone val_instances would silently skip validation AND "
             "the best-checkpoint save)"
         )
-    if init_weights is None:
-        if encoder in ("bert", "bert_entity"):
-            # the reference's BERT bag branch (example/train_bag_bert.py:
-            # BERT encoder + att/avg/one bag model, opt='adamw'); the
-            # bag kernels fine-tune it through the same
-            # encoder_forward_train/encoder_backward dispatch
-            from ..functions.bert_kernels import default_bert_model
-
-            _, w0 = default_bert_model(
-                entity=(encoder == "bert_entity"), schema=schema
-            )
-        else:
-            from ..functions.weights import default_model
-
-            _, w0 = default_model(schema=schema, pcnn=pcnn)
-        weights = dict(w0)
-    else:
-        weights = dict(init_weights)
-
+    weights = _initial_weights(init_weights, encoder, schema)
     encoded = encode_labeled(instances, schema=schema, encoder=encoder)
     if loss_weight:
         # class_freq_weight_vector counts labels over the encoded
@@ -831,283 +1053,30 @@ def train_bag_attention(
         if loss_weight
         else None
     )
-    step_fn, opt_state = make_optimizer(
-        opt, weights, lr, weight_decay,
+    validate = None
+    if val_instances is not None:
+        def validate(w):
+            return float(evaluate_bag_model(
+                val_instances, val_facts, w, schema=schema, method=method,
+                encoder=encoder, bag_cap=bag_cap, bag_size=bag_size,
+                tmp_dir=val_tmp_dir,
+            )[metric])
+
+    micro_batches = functools.partial(
+        _bag_micro_batches, class_weights=class_weights, dropout_p=dropout,
+        bert_dropout_p=bert_dropout, bag_size=bag_size,
+        sort_cols=[c for c in _SORT_COLS if c in instances.columns],
+        method=method,
+    )
+    return _train_loop(
+        bags, n_bags, "bags", weights, epoch_batch_col, micro_batches,
+        validate, f"val_{metric}", method == "att",
         used_keys=gk.used_param_keys(weights, model="bag", method=method),
+        schema=schema, epochs=epochs, batch_size=batch_size, lr=lr,
+        weight_decay=weight_decay, opt=opt, seed=seed,
+        warmup_step=warmup_step, combine_fanin=combine_fanin,
+        resume_dir=resume_dir, ckpt=ckpt,
     )
-    best_metric = None
-    start_epoch = 0
-    history: list[dict] = []
-    if resume_dir is not None:
-        start_epoch, w_res, opt_res, history = _load_train_state(
-            resume_dir, schema
-        )
-        if w_res is not None:
-            weights = dict(w_res)  # incl. derived max_length/pcnn keys
-        if opt_res is not None and opt_state is not None:
-            opt_state.update(opt_res)
-        if val_instances is not None and history:
-            best = [h.get(f"val_{metric}") for h in history
-                    if h.get(f"val_{metric}") is not None]
-            best_metric = max(best) if best else None
-    sort_cols = [c for c in _SORT_COLS if c in instances.columns]
-    n_batches = max(1, math.ceil(n_bags / batch_size))
-    # reference schedule length: len(dataset) // batch_size * max_epoch
-    # (sentence_re.py:86 — floor, NOT epochs * n_batches; ADVICE r4)
-    total_steps = (n_bags // batch_size) * epochs
-    if warmup_step > 0 and total_steps == 0:
-        # the reference's formula degenerates identically, but there it
-        # trains silently at lr-multiplier 0 forever; fail fast instead
-        raise ValueError(
-            f"warmup schedule has 0 total steps ({n_bags} bags // "
-            f"batch_size {batch_size} * {epochs} epochs) — every "
-            "post-warmup step would run at lr 0; shrink batch_size or "
-            "disable warmup"
-        )
-    # reference global_step: completed optimizer steps only
-    # (sentence_re.py:97,124-128); resume rebuilds it from history
-    global_step = sum(int(h.get("n_steps", 0)) for h in history)
-    sc = spark.sparkContext
-    for epoch in range(start_epoch, epochs):
-        with_batch = bags.withColumn(
-            "__batch", epoch_batch_col(epoch, n_batches, seed)
-        )
-        sums = {"loss": 0.0, "acc": 0.0, "pos_acc": 0.0}
-        n_steps = 0
-        for step in range(n_batches):
-            weights_bc = sc.broadcast(weights)
-            pdf = (
-                with_batch.filter(F.col("__batch") == F.lit(step))
-                .drop("__batch")
-                .mapInPandas(
-                    _bag_partials(
-                        weights_bc, class_weights, dropout, bag_size, seed,
-                        sort_cols, salt=(seed, epoch, step), method=method,
-                        bert_dropout_p=bert_dropout,
-                    ),
-                    schema=_PARTIAL_SCHEMA,
-                )
-            )
-            if combine_fanin:
-                pdf = tree_combine(pdf, combine_fanin)
-            partials = pdf.collect()
-            weights_bc.destroy()
-            if not partials:
-                continue  # hash-mod batch came up empty this epoch
-            st, gsum = _reduce_partials(partials, weights)
-            w_sum = st["w_sum"]
-            lr_mult = (
-                gk.linear_warmup_multiplier(
-                    global_step, warmup_step, total_steps
-                )
-                if warmup_step > 0
-                else 1.0
-            )
-            weights = step_fn(
-                weights, gk.unflatten_grads(gsum / w_sum, weights), lr_mult
-            )
-            sums["loss"] += st["loss_wsum"] / w_sum
-            sums["acc"] += st["n_correct"] / st["n"]
-            sums["pos_acc"] += (
-                (st["n_pos_correct"] / st["n_pos"]) if st["n_pos"] > 0 else 0.0
-            )
-            n_steps += 1
-            global_step += 1
-        row = {
-            "epoch": epoch,
-            "n_steps": n_steps,
-            "global_step": global_step,
-            "avg_loss": sums["loss"] / max(n_steps, 1),
-            "avg_acc": sums["acc"] / max(n_steps, 1),
-            "avg_pos_acc": sums["pos_acc"] / max(n_steps, 1),
-        }
-        if val_instances is not None and val_facts is not None:
-            res = evaluate_bag_model(
-                val_instances, val_facts, weights, schema=schema,
-                method=method, encoder=encoder,
-                bag_cap=bag_cap, bag_size=bag_size, tmp_dir=val_tmp_dir,
-            )
-            row[f"val_{metric}"] = float(res[metric])
-            if best_metric is None or res[metric] > best_metric:
-                best_metric = float(res[metric])
-                if ckpt is not None:
-                    from .. import relations
-                    from ..functions.weights import save_weights_npz
-
-                    save_weights_npz(
-                        weights, ckpt, rel2id=relations.rel2id_for(schema),
-                        keep_diag=(method == "att"),
-                    )
-        history.append(row)
-        if resume_dir is not None:
-            _save_train_epoch(resume_dir, epoch, weights, opt_state, row, schema)
-    if ckpt is not None and val_instances is None:
-        from .. import relations
-        from ..functions.weights import save_weights_npz
-
-        save_weights_npz(weights, ckpt, rel2id=relations.rel2id_for(schema),
-                         keep_diag=(method == "att"))
-    return weights, history
-
-
-def _sentence_partials(weights_bc, class_weights, dropout_p: float,
-                       salt: tuple = (0, 0, 0),
-                       bert_dropout_p: float = 0.0,
-                       multilabel: bool = False):
-    def run(batches):
-        weights = weights_bc.value
-        bert = "conv_w" not in weights
-        micro = _BERT_TRAIN_MICRO_SENTS if bert else _TRAIN_MICRO_SENTS
-        rng = None
-        if dropout_p > 0 or bert_dropout_p > 0:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-            rng = np.random.default_rng((*salt, pid))
-        acc = None
-        loss_wsum = w_sum = n = n_correct = n_pos = n_pos_correct = 0.0
-        for pdf in batches:
-            for lo in range(0, len(pdf), micro):
-                sub = pdf.iloc[lo : lo + micro]
-                token = np.stack([np.asarray(t) for t in sub["token"]])
-                pos1 = np.stack([np.asarray(t) for t in sub["pos1"]])
-                pos2 = np.stack([np.asarray(t) for t in sub["pos2"]])
-                mask = (
-                    np.stack([np.asarray(t) for t in sub["mask"]])
-                    if "mask" in sub.columns else None
-                )
-                labels = sub["label_id"].to_numpy(dtype=np.int64)
-                if multilabel:
-                    # SigmoidNN + BCE (multi_label_sentence_re.py);
-                    # encoder family resolves inside the kernel's
-                    # encoder_forward_train dispatch
-                    lw, ws, nc, npos, npc, grads = (
-                        gk.multilabel_sentence_train_batch(
-                            token, pos1, pos2, labels, weights,
-                            dropout_p=dropout_p, rng=rng, mask=mask,
-                            bert_dropout_p=bert_dropout_p,
-                        )
-                    )
-                elif bert:
-                    from ..functions import bert_grad_kernels as bgk
-
-                    # mask column = attention mask; pos1/pos2 are the
-                    # (B, 1) entity-marker positions
-                    lw, ws, nc, npos, npc, grads = (
-                        bgk.bert_sentence_train_batch(
-                            token, mask, pos1.reshape(-1), pos2.reshape(-1),
-                            labels, weights, class_weights=class_weights,
-                            dropout_p=dropout_p,
-                            bert_dropout_p=bert_dropout_p, rng=rng,
-                        )
-                    )
-                else:
-                    lw, ws, nc, npos, npc, grads = gk.sentence_train_batch(
-                        token, pos1, pos2, labels, weights,
-                        class_weights=class_weights, dropout_p=dropout_p,
-                        rng=rng, mask=mask,
-                    )
-                loss_wsum += lw
-                w_sum += ws
-                # the multilabel meter denominator is ELEMENTS
-                # (B * (N-1), multi_label_sentence_re.py:124), not rows
-                n += ws if multilabel else len(labels)
-                n_correct += nc
-                n_pos += npos
-                n_pos_correct += npc
-                g = gk.flatten_grads(grads, weights)
-                acc = g if acc is None else acc + g
-        if acc is not None:
-            widx, wvals, rest = gk.split_word_grad(acc, weights)
-            yield pd.DataFrame(
-                {
-                    "loss_wsum": [loss_wsum], "w_sum": [w_sum], "n": [n],
-                    "n_correct": [n_correct], "n_pos": [n_pos],
-                    "n_pos_correct": [n_pos_correct], "grad": [rest],
-                    "word_idx": [widx], "word_grad": [wvals],
-                }
-            )
-
-    return run
-
-
-def evaluate_multilabel(
-    val_instances: DataFrame,
-    weights: dict,
-    schema: str = "reduced",
-    encoder: str = "cnn",
-    threshold: float = config.SCORE_THRESHOLD,
-    tmp_dir: str | None = None,
-) -> dict:
-    """MultiLabelSentenceRE.eval_model (multi_label_sentence_re.py:
-    151-185) with in-memory weights, through the PRODUCTION sigmoid
-    scoring path + metrics.multilabel_sentence_eval (A10): per-sentence
-    sigmoid scores explode to (sent_id, relation, score, label) cells —
-    labels one-hot the instance's single label_id exactly like the
-    reference's train/val construction (multi_label_sentence_re.py:
-    117-120). Rows carrying a non-null `anno_relation_list` (the
-    NYT10m/Wiki20m manual-test shape, data_loader.py:393-397) instead
-    label every listed relation — the reference's per-row
-    `'anno_relation_list' in item` duck-typing, so single-label and
-    annotated rows mix in one table. Returns the multilabel eval dict
-    (acc, auc, micro/macro F1, p@k, ...)."""
-    import os
-    import tempfile
-
-    from .. import relations
-    from ..functions.weights import save_weights_npz
-    from .metrics import multilabel_sentence_eval
-    from .scoring import score_instances
-
-    rel2id = relations.rel2id_for(schema)
-    fd, path = tempfile.mkstemp(
-        suffix=".npz", prefix="spark_graft_val_", dir=tmp_dir
-    )
-    os.close(fd)
-    try:
-        save_weights_npz(weights, path, rel2id=rel2id)
-        scored = score_instances(
-            val_instances, with_scores=True, classifier="sigmoid",
-            schema=schema, encoder=encoder, ckpt=path,
-        )
-        sort_cols = [c for c in _SORT_COLS if c in scored.columns]
-        spark = val_instances.sparkSession
-        rel_dim = spark.createDataFrame(
-            [(r, i) for r, i in sorted(rel2id.items())],
-            "relation string, rel_id int",
-        )
-        has_anno = "anno_relation_list" in scored.columns
-        anno_cols = ["anno_relation_list"] if has_anno else []
-        one_hot = (F.col("rel_id") == F.col("label_id")).cast("int")
-        label_col = (
-            F.when(
-                F.col("anno_relation_list").isNotNull(),
-                F.array_contains(
-                    "anno_relation_list", F.col("relation")
-                ).cast("int"),
-            ).otherwise(one_hot)
-            if has_anno
-            else one_hot
-        )
-        cells = (
-            scored.withColumn(
-                "sent_id", F.xxhash64("h_id", "t_id", *sort_cols)
-            )
-            .select(
-                "sent_id", "label_id", *anno_cols,
-                F.posexplode("scores").alias("rel_id", "score"),
-            )
-            .join(F.broadcast(rel_dim), "rel_id")
-            .select(
-                "sent_id",
-                "relation",
-                F.col("score").cast("double").alias("score"),
-                label_col.alias("label"),
-            )
-        )
-        return multilabel_sentence_eval(cells, rel2id, threshold=threshold)
-    finally:
-        os.remove(path)
 
 
 def train_sentence_model(
@@ -1179,22 +1148,7 @@ def train_sentence_model(
             "(MultiLabelSentenceRE uses unweighted BCEWithLogitsLoss, "
             "multi_label_sentence_re.py:55)"
         )
-    spark = instances.sparkSession
-    pcnn = encoder == "pcnn"
-    if init_weights is None:
-        if encoder in ("bert", "bert_entity"):
-            from ..functions.bert_kernels import default_bert_model
-
-            _, w0 = default_bert_model(
-                entity=(encoder == "bert_entity"), schema=schema
-            )
-        else:
-            from ..functions.weights import default_model
-
-            _, w0 = default_model(schema=schema, pcnn=pcnn)
-        weights = dict(w0)
-    else:
-        weights = dict(init_weights)
+    weights = _initial_weights(init_weights, encoder, schema)
     encoded = _materialize(
         encode_labeled(instances, schema=schema, encoder=encoder),
         checkpoint_mode,
@@ -1207,126 +1161,35 @@ def train_sentence_model(
         if loss_weight
         else None
     )
-    step_fn, opt_state = make_optimizer(
-        opt, weights, lr, weight_decay,
+    validate = None
+    if val_instances is not None and multilabel:
+        def validate(w):
+            return float(evaluate_multilabel(
+                val_instances, w, schema=schema, encoder=encoder,
+                tmp_dir=val_tmp_dir,
+            )["acc"])
+    elif val_instances is not None:
+        def validate(w):
+            return evaluate_sentence_acc(
+                val_instances, w, schema=schema, encoder=encoder,
+                tmp_dir=val_tmp_dir,
+            )
+
+    sort_cols = [c for c in _SORT_COLS if c in encoded.columns]
+    micro_batches = functools.partial(
+        _sentence_micro_batches, class_weights=class_weights,
+        dropout_p=dropout, bert_dropout_p=bert_dropout, multilabel=multilabel,
+    )
+    return _train_loop(
+        encoded, n_inst, "instances", weights,
+        functools.partial(sentence_batch_col, sort_cols=sort_cols),
+        micro_batches, validate, "val_acc",
+        False,  # SoftmaxNN ckpts carry no diag
         used_keys=gk.used_param_keys(
             weights, model="multilabel" if multilabel else "sentence"
         ),
+        schema=schema, epochs=epochs, batch_size=batch_size, lr=lr,
+        weight_decay=weight_decay, opt=opt, seed=seed,
+        warmup_step=warmup_step, combine_fanin=combine_fanin,
+        resume_dir=resume_dir, ckpt=ckpt,
     )
-    best_metric = None
-    start_epoch = 0
-    history: list[dict] = []
-    if resume_dir is not None:
-        start_epoch, w_res, opt_res, history = _load_train_state(
-            resume_dir, schema
-        )
-        if w_res is not None:
-            weights = dict(w_res)
-        if opt_res is not None and opt_state is not None:
-            opt_state.update(opt_res)
-        if val_instances is not None and history:
-            best = [h.get("val_acc") for h in history
-                    if h.get("val_acc") is not None]
-            best_metric = max(best) if best else None
-    sort_cols = [c for c in _SORT_COLS if c in encoded.columns]
-    n_batches = max(1, math.ceil(n_inst / batch_size))
-    # reference schedule length (floor) + global_step position — see
-    # train_bag_attention's warmup_step note
-    total_steps = (n_inst // batch_size) * epochs
-    if warmup_step > 0 and total_steps == 0:
-        raise ValueError(
-            f"warmup schedule has 0 total steps ({n_inst} instances // "
-            f"batch_size {batch_size} * {epochs} epochs) — every "
-            "post-warmup step would run at lr 0; shrink batch_size or "
-            "disable warmup"
-        )
-    global_step = sum(int(h.get("n_steps", 0)) for h in history)
-    sc = spark.sparkContext
-    for epoch in range(start_epoch, epochs):
-        with_batch = encoded.withColumn(
-            "__batch", sentence_batch_col(epoch, n_batches, seed, sort_cols)
-        )
-        sums = {"loss": 0.0, "acc": 0.0, "pos_acc": 0.0}
-        n_steps = 0
-        for step in range(n_batches):
-            weights_bc = sc.broadcast(weights)
-            pdf = (
-                with_batch.filter(F.col("__batch") == F.lit(step))
-                .drop("__batch")
-                .mapInPandas(
-                    _sentence_partials(
-                        weights_bc, class_weights, dropout,
-                        salt=(seed, epoch, step),
-                        bert_dropout_p=bert_dropout,
-                        multilabel=multilabel,
-                    ),
-                    schema=_PARTIAL_SCHEMA,
-                )
-            )
-            if combine_fanin:
-                pdf = tree_combine(pdf, combine_fanin)
-            partials = pdf.collect()
-            weights_bc.destroy()
-            if not partials:
-                continue
-            st, gsum = _reduce_partials(partials, weights)
-            w_sum = st["w_sum"]
-            lr_mult = (
-                gk.linear_warmup_multiplier(
-                    global_step, warmup_step, total_steps
-                )
-                if warmup_step > 0
-                else 1.0
-            )
-            weights = step_fn(
-                weights, gk.unflatten_grads(gsum / w_sum, weights), lr_mult
-            )
-            sums["loss"] += st["loss_wsum"] / w_sum
-            sums["acc"] += st["n_correct"] / st["n"]
-            sums["pos_acc"] += (
-                (st["n_pos_correct"] / st["n_pos"]) if st["n_pos"] > 0 else 0.0
-            )
-            n_steps += 1
-            global_step += 1
-        row = {
-            "epoch": epoch,
-            "n_steps": n_steps,
-            "global_step": global_step,
-            "avg_loss": sums["loss"] / max(n_steps, 1),
-            "avg_acc": sums["acc"] / max(n_steps, 1),
-            "avg_pos_acc": sums["pos_acc"] / max(n_steps, 1),
-        }
-        if val_instances is not None:
-            if multilabel:
-                acc = float(
-                    evaluate_multilabel(
-                        val_instances, weights, schema=schema,
-                        encoder=encoder, tmp_dir=val_tmp_dir,
-                    )["acc"]
-                )
-            else:
-                acc = evaluate_sentence_acc(
-                    val_instances, weights, schema=schema, encoder=encoder,
-                    tmp_dir=val_tmp_dir,
-                )
-            row["val_acc"] = acc
-            if best_metric is None or acc > best_metric:
-                best_metric = acc
-                if ckpt is not None:
-                    from .. import relations
-                    from ..functions.weights import save_weights_npz
-
-                    save_weights_npz(
-                        weights, ckpt, rel2id=relations.rel2id_for(schema),
-                        keep_diag=False,  # SoftmaxNN ckpts carry no diag
-                    )
-        history.append(row)
-        if resume_dir is not None:
-            _save_train_epoch(resume_dir, epoch, weights, opt_state, row, schema)
-    if ckpt is not None and val_instances is None:
-        from .. import relations
-        from ..functions.weights import save_weights_npz
-
-        save_weights_npz(weights, ckpt, rel2id=relations.rel2id_for(schema),
-                         keep_diag=False)
-    return weights, history

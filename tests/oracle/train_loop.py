@@ -213,12 +213,11 @@ def serial_train_sentences_bert(
     opt="adamw", warmup_step=0, total_steps=None,
 ):
     """BERT sentence-model serial twin: one ROW per kernel call through
-    bert_grad_kernels.bert_sentence_train_batch, the distributed loop's
+    grad_kernels.sentence_train_batch (BERT weights dispatch to the
+    transformer; `mask` carries the attention mask), the distributed loop's
     schedule + the reference's warmup conventions (global_step position,
     floor total_steps — see serial_train_bags), reference AverageMeter
     semantics. rows: (token, att_mask, pos1, pos2, label)."""
-    from opennre_spark.functions import bert_grad_kernels as bgk
-
     W = dict(W0)
     opt_state = gk.adam_init(W) if opt in ("adam", "adamw") else None
     used_keys = gk.used_param_keys(W, model="sentence")
@@ -245,12 +244,12 @@ def serial_train_sentences_bert(
             loss_wsum = w_sum = 0.0
             n_correct = n_pos = n_pos_correct = 0
             for token, att_mask, pos1, pos2, label in batch:
-                lw, ws, nc, npos, npc, grads = bgk.bert_sentence_train_batch(
-                    token[None, :], att_mask[None, :],
+                lw, ws, nc, npos, npc, grads = gk.sentence_train_batch(
+                    token[None, :],
                     np.array([pos1], dtype=np.int64),
                     np.array([pos2], dtype=np.int64),
                     np.array([label], dtype=np.int64),
-                    W, class_weights=class_weights,
+                    W, class_weights=class_weights, mask=att_mask[None, :],
                 )
                 loss_wsum += lw
                 w_sum += ws

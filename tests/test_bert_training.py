@@ -135,8 +135,8 @@ def _run_fd(entity: bool, dropout_p: float, bert_dropout_p: float, seed=99):
             if (dropout_p > 0 or bert_dropout_p > 0)
             else None
         )
-        return bgk.bert_sentence_train_batch(
-            token, att_mask, pos1, pos2, labels, w, class_weights=cw,
+        return gk.sentence_train_batch(
+            token, pos1, pos2, labels, w, mask=att_mask, class_weights=cw,
             dropout_p=dropout_p, bert_dropout_p=bert_dropout_p, rng=rng,
         )
 
@@ -193,8 +193,8 @@ def test_param_keys_families():
 def test_flatten_roundtrip_and_sparse_word_grad_bert():
     W = tiny_bert_weights(np.float64)
     token, att_mask, pos1, pos2, labels = tiny_batch()
-    *_, grads = bgk.bert_sentence_train_batch(
-        token, att_mask, pos1, pos2, labels, W
+    *_, grads = gk.sentence_train_batch(
+        token, pos1, pos2, labels, W, mask=att_mask
     )
     flat = gk.flatten_grads(grads, W)
     back = gk.unflatten_grads(flat, W)

@@ -198,3 +198,28 @@ def test_projected_tables_pin_every_source_array(model):
     assert t1 is not t0
     # tap-0 word rows must reflect the swapped embedding
     assert not np.allclose(t0[0][0, -1], t1[0][0, -1])
+
+
+def test_projection_cache_bounded_by_bytes(model, monkeypatch):
+    """A long-lived executor cycling weight sets must not pin more
+    projected-table bytes than the gate admits (_PROJ_MAX_BYTES): 20
+    distinct weight sets of the default model (0.82 MB of tables each)
+    stay within the bound while the newest set still hits the cache."""
+    _, W0 = model
+    monkeypatch.setattr(kernels, "_PROJ_CACHE", {})
+
+    def cached_bytes():
+        return sum(
+            t.nbytes
+            for _, tables in kernels._PROJ_CACHE.values()
+            if tables is not None
+            for t in tables
+        )
+
+    for i in range(20):
+        W = dict(W0)
+        W["conv_w"] = W0["conv_w"] + np.float32(i)
+        tables = kernels._projected_tables(W)
+        assert tables is not None
+        assert cached_bytes() <= kernels._PROJ_MAX_BYTES, f"weight set {i}"
+    assert kernels._projected_tables(W) is tables

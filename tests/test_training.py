@@ -868,19 +868,23 @@ def test_sentence_val_acc_and_ckpt(spark, tmp_path):
     assert math.isclose(acc, max(vals), rel_tol=1e-12)
 
 
-def test_tree_combine_matches_direct_collect(spark):
+@pytest.mark.parametrize(
+    "train", ["train_bag_attention", "train_sentence_model"]
+)
+def test_tree_combine_matches_direct_collect(spark, train):
     """combine_fanin routes partials through a second-level reducer —
     results must match the direct driver collect (float64 summation
-    regroups only)."""
+    regroups only), for the bag and the sentence model alike."""
     from opennre_spark.functions.weights import default_model
-    from opennre_spark.operators.training import train_bag_attention
+    from opennre_spark.operators import training
 
+    train = getattr(training, train)
     inst = _labeled_instances(spark, n=24)
     _, W0 = default_model(schema="reduced")
     kw = dict(epochs=2, batch_size=8, lr=0.2, weight_decay=1e-4,
               seed=11, init_weights=W0)
-    W_direct, hist_direct = train_bag_attention(inst, **kw)
-    W_tree, hist_tree = train_bag_attention(inst, combine_fanin=2, **kw)
+    W_direct, hist_direct = train(inst, **kw)
+    W_tree, hist_tree = train(inst, combine_fanin=2, **kw)
     for hd, ht in zip(hist_direct, hist_tree):
         assert math.isclose(hd["avg_loss"], ht["avg_loss"], rel_tol=1e-9)
         assert hd["avg_acc"] == ht["avg_acc"]
@@ -920,12 +924,16 @@ def test_training_resume_equals_uninterrupted(spark, tmp_path):
             )
 
 
-def test_sentence_resume_equals_uninterrupted(spark, tmp_path):
+@pytest.mark.parametrize(
+    "multilabel", [False, True], ids=["softmax", "multilabel"]
+)
+def test_sentence_resume_equals_uninterrupted(spark, tmp_path, multilabel):
     """The sentence loop's resume machinery (same epoch-checkpoint
     scheme as the bag loop; the reference checkpoints sentence training
     too, sentence_re.py:133-139): a staged run (1 epoch, then resume
     for 2 more) equals an uninterrupted 3-epoch run for BOTH
-    optimizers — adam's moments must survive the restart."""
+    optimizers — adam's moments must survive the restart — under the
+    softmax and the multilabel (SigmoidNN + BCE) step alike."""
     from opennre_spark.functions.weights import default_model
     from opennre_spark.operators.training import train_sentence_model
 
@@ -934,7 +942,7 @@ def test_sentence_resume_equals_uninterrupted(spark, tmp_path):
     for opt, lr in (("sgd", 0.3), ("adam", 0.01)):
         kw = dict(
             batch_size=8, lr=lr, weight_decay=1e-4, seed=31,
-            init_weights=W0, opt=opt,
+            init_weights=W0, opt=opt, multilabel=multilabel,
         )
         W_full, hist_full = train_sentence_model(inst, epochs=3, **kw)
         rdir = str(tmp_path / f"sent_resume_{opt}")
