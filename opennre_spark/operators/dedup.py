@@ -578,7 +578,7 @@ def simhash_dup_pairs(
     from .similarity import _first_band_match
 
     xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    first_match = _first_band_match(xor, F.col("a.band"), 16, 4)
+    first_match = F.expr(_first_band_match("a.simhash ^ b.simhash", "a.band", 16, 4))
     cand = a.join(
         b,
         (F.col("a.band") == F.col("b.band"))

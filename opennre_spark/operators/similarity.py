@@ -5,33 +5,67 @@
     exact cosine).
 
 Everything is Spark SQL higher-order functions (JVM codegen): dot
-products via zip_with + aggregate in double precision — no Python UDF,
-no driver-side collect of vectors (only the query vector is a literal).
+products are a left-to-right double fold, aggregate over zip_with — no
+Python UDF, no driver-side collect of vectors (only the query vector
+and the hyperplanes are literals).
+
+The expressions are written as SQL text (selectExpr / F.expr), not
+built through Column calls. Each Column call is a py4j round trip, and
+on pyspark 4.x it also records its call site in the JVM; a 64-dim
+signature with 16 planes took over 8,000 round trips and about a
+second of driver time per plan, against 39 for the parsed text. Both
+forms resolve to the same Catalyst expressions, so plans and output
+bits are unchanged. Literals go through _sql_double, which renders any
+Python float exactly.
 """
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _q(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_double(v) -> str:
+    """One float as a DOUBLE SQL literal that parses back to the same
+    bits: repr is Python's shortest round-trip form (exponents and -0.0
+    included) and the D suffix keeps it from parsing as DECIMAL. NaN
+    and the infinities have no literal syntax, so they are cast from
+    strings."""
+    v = float(v)
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return f"CAST('{'' if v > 0 else '-'}Infinity' AS DOUBLE)"
+    return repr(v) + "D"
+
+
+def _array_sql(values) -> str:
+    return "array(" + ", ".join(_sql_double(v) for v in values) + ")"
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """Dot product of two array columns, folded left to right in double
+    precision from 0.0 — the summation order the 6-decimal oracle
+    rounding relies on."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+        "0.0D, (acc, v) -> acc + v)"
     )
 
 
-def _norm(a):
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
+        "0.0D, (acc, v) -> acc + v))"
     )
 
 
@@ -46,24 +80,26 @@ def cosine_topk(
     + a k-row ordered take (Spark's TakeOrderedAndProject — no full
     sort materialization). Ties broken by id for determinism.
     """
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    vec = _q(vec_col)
     qn = sum(float(v) * float(v) for v in query_vec) ** 0.5
-    cos = (_dot(F.col(vec_col), q) / (_norm(F.col(vec_col)) * F.lit(qn))).alias(
-        "cos_sim"
+    cos = (
+        f"{_dot_sql(vec, _array_sql(query_vec))} / "
+        f"({_norm_sql(vec)} * {_sql_double(qn)}) AS cos_sim"
     )
     return (
-        embeddings.select(id_col, cos)
+        embeddings.selectExpr(_q(id_col), cos)
         .orderBy(F.col("cos_sim").desc(), id_col)
         .limit(k)
     )
 
 
-def _first_band_match(xor, band_col, per_band: int, num_bands: int):
-    """True iff every band BELOW band_col differs between the two packed
-    signatures `xor = sig_a ^ sig_b` — i.e. this candidate row's band is
-    the pair's FIRST matching band. Used as a band-join predicate so
-    each colliding pair is emitted exactly once, replacing a
-    dropDuplicates over the full candidate enumeration.
+def _first_band_match(xor: str, band: str, per_band: int, num_bands: int) -> str:
+    """SQL predicate text: true iff every band BELOW `band` differs
+    between the two packed signatures whose XOR is the SQL expression
+    `xor` (e.g. "a.sig_word ^ b.sig_word") — i.e. this candidate row's
+    band is the pair's FIRST matching band. Used as a band-join
+    predicate so each colliding pair is emitted exactly once, replacing
+    a dropDuplicates over the full candidate enumeration.
 
     Arithmetic form (a naive when-chain of AND terms was O(bands^2)
     branch ops per row and measurably slower than the dedup it
@@ -73,18 +109,19 @@ def _first_band_match(xor, band_col, per_band: int, num_bands: int):
     Safe for signatures up to 64 bits: the fold only reads real bits
     (slice_start + i <= 63 for i < per_band), never sign-extension
     artifacts."""
-    y = xor
-    for i in range(1, per_band):
-        y = y.bitwiseOR(F.shiftright(xor, i))
+    y = " | ".join(
+        [f"({xor})"] + [f"shiftright({xor}, {i})" for i in range(1, per_band)]
+    )
     low = [
         sum(1 << (b * per_band) for b in range(k)) for k in range(num_bands)
     ]
-    lowmask = F.lit(low[0]).cast("long")
+    lowmask = f"CAST({low[0]} AS BIGINT)"
     for k in range(1, num_bands):
-        lowmask = F.when(band_col == k, F.lit(low[k]).cast("long")).otherwise(
-            lowmask
+        lowmask = (
+            f"CASE WHEN {band} = {k} THEN CAST({low[k]} AS BIGINT) "
+            f"ELSE {lowmask} END"
         )
-    return y.bitwiseAND(lowmask) == lowmask
+    return f"(({y}) & ({lowmask})) = ({lowmask})"
 
 
 def hyperplane_signature(
@@ -110,45 +147,48 @@ def hyperplane_signature(
     (2^per_band - 1). The self-join uses it to emit each colliding pair
     exactly ONCE — at its first matching band — instead of
     deduplicating the band-join output afterwards (see ann_self_join).
-    Requires num_planes <= 63 (the signature must fit a signed long
-    without touching the sign bit).
+    Requires 1 <= num_planes <= 63 (the signature must fit a signed
+    long without touching the sign bit) and num_bands >= 1 dividing
+    num_planes: every plane belongs to exactly one band (a remainder
+    would be left out of every band, and zero-width bands would make
+    every pair a candidate).
     """
+    if num_planes < 1 or num_bands < 1:
+        raise ValueError("num_planes and num_bands must be >= 1")
     if num_planes > 63:
         raise ValueError("num_planes must be <= 63 to pack into sig_word")
+    if num_planes % num_bands:
+        raise ValueError(
+            f"num_bands ({num_bands}) must divide num_planes ({num_planes})"
+        )
     rng = random.Random(seed)
     planes = [
         [rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)
     ]
+    vec, idc = _q(vec_col), _q(id_col)
     bits = [
-        F.when(
-            _dot(F.col(vec_col), F.array(*[F.lit(p) for p in plane])) > 0, 1
-        ).otherwise(0).alias(f"__b{i}")
+        f"CASE WHEN {_dot_sql(vec, _array_sql(plane))} > 0 THEN 1 ELSE 0 END"
+        f" AS __b{i}"
         for i, plane in enumerate(planes)
     ]
-    df = embeddings.select(id_col, *bits)
     per_band = num_planes // num_bands
-    word = sum(
-        (F.col(f"__b{i}").cast("long") * F.lit(2**i) for i in range(num_planes)),
-        F.lit(0).cast("long"),
+    word = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [f"CAST(__b{i} AS BIGINT) * {2**i}" for i in range(num_planes)]
     )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                sum(
-                    (
-                        F.col(f"__b{bi * per_band + r}") * F.lit(2**r)
-                        for r in range(per_band)
-                    ),
-                    F.lit(0),
-                ).alias("band_bits"),
-            )
-            for bi in range(num_bands)
-        ]
+    bands = ", ".join(
+        f"struct({bi} AS band, "
+        + " + ".join(
+            ["0"] + [f"__b{bi * per_band + r} * {2**r}" for r in range(per_band)]
+        )
+        + " AS band_bits)"
+        for bi in range(num_bands)
     )
-    return df.select(
-        id_col, F.explode(bands).alias("b"), word.alias("sig_word")
-    ).select(id_col, "b.band", "b.band_bits", "sig_word")
+    return (
+        embeddings.selectExpr(idc, *bits)
+        .selectExpr(idc, f"explode(array({bands})) AS b", f"{word} AS sig_word")
+        .selectExpr(idc, "b.band", "b.band_bits", "sig_word")
+    )
 
 
 def ann_self_join(
@@ -183,17 +223,16 @@ def ann_self_join(
     (small dimension tables locally; shuffled joins past the probe
     limit at corpus scale).
     """
+    sigs = hyperplane_signature(embeddings, dim, id_col=id_col, vec_col=vec_col, **lsh_kwargs)
     num_planes = lsh_kwargs.get("num_planes", 16)
     num_bands = lsh_kwargs.get("num_bands", 4)
     per_band = num_planes // num_bands
-    sigs = hyperplane_signature(embeddings, dim, id_col=id_col, vec_col=vec_col, **lsh_kwargs)
+    idc, vec = _q(id_col), _q(vec_col)
     # r7: the vector norm is precomputed per VECTOR instead of per
-    # candidate pair — _norm is a deterministic expression, so
+    # candidate pair — the norm is a deterministic expression, so
     # norm-once / norm-per-pair produce the identical double, and the
     # per-pair verification work drops from dot+2 norms to the dot
-    vec_tbl = embeddings.select(
-        id_col, F.col(vec_col), _norm(F.col(vec_col)).alias("__nrm")
-    )
+    vec_tbl = embeddings.selectExpr(idc, vec, f"{_norm_sql(vec)} AS __nrm")
     vec_hint = lambda d: d  # noqa: E731
     if materialize:
         # self-join sides + two vector join-backs are independent
@@ -204,21 +243,15 @@ def ann_self_join(
         vec_tbl, vec_hint = broadcast_hint_if_small(vec_tbl, limit_rows=500_000)
     a, b = sigs.alias("a"), sigs.alias("b")
     first_match = _first_band_match(
-        F.col("a.sig_word").bitwiseXOR(F.col("b.sig_word")),
-        F.col("a.band"),
-        per_band,
-        num_bands,
+        "a.sig_word ^ b.sig_word", "a.band", per_band, num_bands
     )
     cand = a.join(
         b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_bits") == F.col("b.band_bits"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        & first_match,
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"),
-        F.col(f"b.{id_col}").alias("id_b"),
-    )
+        F.expr(
+            f"a.band = b.band AND a.band_bits = b.band_bits"
+            f" AND a.{idc} < b.{idc} AND {first_match}"
+        ),
+    ).selectExpr(f"a.{idc} AS id_a", f"b.{idc} AS id_b")
     # pin verification parallelism: the signature table's BYTES are
     # tiny, so AQE's byte-based coalescing folds the band join into a
     # couple of partitions — its candidate OUTPUT (millions of pairs)
@@ -232,30 +265,15 @@ def ann_self_join(
         max(spark.sparkContext.defaultParallelism * 2, 16)
     )
     cand = cand.join(
-        vec_hint(
-            vec_tbl.select(
-                F.col(id_col).alias("id_a"),
-                F.col(vec_col).alias("va"),
-                F.col("__nrm").alias("na"),
-            )
-        ),
+        vec_hint(vec_tbl.selectExpr(f"{idc} AS id_a", f"{vec} AS va", "__nrm AS na")),
         "id_a",
     ).join(
-        vec_hint(
-            vec_tbl.select(
-                F.col(id_col).alias("id_b"),
-                F.col(vec_col).alias("vb"),
-                F.col("__nrm").alias("nb"),
-            )
-        ),
+        vec_hint(vec_tbl.selectExpr(f"{idc} AS id_b", f"{vec} AS vb", "__nrm AS nb")),
         "id_b",
     )
-    cos = (_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))).alias(
-        "cos_sim"
-    )
-    return cand.select("id_a", "id_b", cos).filter(
-        F.col("cos_sim") >= F.lit(cosine_threshold)
-    )
+    return cand.selectExpr(
+        "id_a", "id_b", f"{_dot_sql('va', 'vb')} / (na * nb) AS cos_sim"
+    ).filter(f"cos_sim >= {_sql_double(cosine_threshold)}")
 
 
 def train_ivf_centroids(

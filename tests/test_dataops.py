@@ -6,6 +6,7 @@ import hashlib
 import math
 import random
 import re
+import struct
 
 import numpy as np
 import pytest
@@ -119,6 +120,14 @@ def test_cosine_topk_matches_numpy(spark):
         assert abs(r.cos_sim - float(cos[i - 1])) < 1e-6
 
 
+def _fold_dot(a, b):
+    """Left-to-right float64 dot from 0.0, the order of the SQL fold."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
 def test_ann_self_join_finds_planted_neighbors(spark):
     rng = np.random.default_rng(11)
     base = rng.normal(size=(30, 16)).astype(np.float32)
@@ -131,6 +140,114 @@ def test_ann_self_join_finds_planted_neighbors(spark):
     got = {(r.id_a, r.id_b) for r in
            similarity.ann_self_join(df, dim=16, cosine_threshold=0.98).collect()}
     assert (0, 100) in got and (7, 107) in got
+    # 16 one-bit bands miss a pair at cosine 0.5 with probability
+    # (1/3)^16, so the blocked output must equal brute force exactly:
+    # same pairs, and each cosine the same double (rows hold float32
+    # values, so the reference sees what Spark stores)
+    vecs = dict(rows)
+    want = {}
+    for i in vecs:
+        for j in vecs:
+            if i < j:
+                c = _fold_dot(vecs[i], vecs[j]) / (
+                    math.sqrt(_fold_dot(vecs[i], vecs[i]))
+                    * math.sqrt(_fold_dot(vecs[j], vecs[j]))
+                )
+                if c >= 0.5:
+                    want[(i, j)] = c
+    got = {(r.id_a, r.id_b): r.cos_sim for r in similarity.ann_self_join(
+        df, dim=16, cosine_threshold=0.5, num_planes=16, num_bands=16
+    ).collect()}
+    assert len(want) > 10
+    assert got == want
+
+
+def _signature_reference(vecs, dim, num_planes, num_bands, seed=7):
+    """(id, band, band_bits, sig_word) rows from the same seeded planes
+    and a left-to-right float64 dot."""
+    rng = random.Random(seed)
+    planes = [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
+    per_band = num_planes // num_bands
+    out = set()
+    for vid, v in vecs.items():
+        bits = [1 if _fold_dot(v, p) > 0 else 0 for p in planes]
+        word = sum(b << i for i, b in enumerate(bits))
+        for band in range(num_bands):
+            chunk = bits[band * per_band:(band + 1) * per_band]
+            out.add((vid, band, sum(b << r for r, b in enumerate(chunk)), word))
+    return out
+
+
+@pytest.mark.parametrize("num_planes,num_bands", [(16, 4), (16, 16), (63, 7)])
+def test_hyperplane_signature_matches_reference(spark, num_planes, num_bands):
+    rng = np.random.default_rng(5)
+    raw = rng.normal(size=(40, 12)).astype(np.float32)
+    vecs = {i: [float(x) for x in raw[i]] for i in range(len(raw))}
+    df = spark.createDataFrame(list(vecs.items()), "vec_id long, embedding array<float>")
+    sig = similarity.hyperplane_signature(df, 12, num_planes, num_bands)
+    assert sig.columns == ["vec_id", "band", "band_bits", "sig_word"]
+    got = {tuple(r) for r in sig.collect()}
+    assert got == _signature_reference(vecs, 12, num_planes, num_bands)
+
+
+def test_hyperplane_signature_rejects_bad_shape(spark):
+    """A band shape that leaves planes out of every band, or bands of
+    zero width (every pair a candidate), is an error, not a silent
+    O(n^2) or lossy join."""
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    for planes, bands in ((16, 0), (0, 4), (16, 5)):
+        with pytest.raises(ValueError):
+            similarity.hyperplane_signature(df, 2, num_planes=planes, num_bands=bands)
+    with pytest.raises(ValueError):
+        similarity.ann_self_join(df, 2, num_planes=16, num_bands=5)
+    with pytest.raises(ValueError):
+        dedup.embedding_dedup(df, 2, num_planes=32, num_bands=64)
+
+
+def test_sql_double_roundtrips_exactly(spark):
+    vals = [5e-324, 1e-300, 1e22, -0.0, 0.1, -1.5e-07, float("nan"),
+            float("inf"), float("-inf")]
+    df = spark.range(1).selectExpr(
+        *[f"{similarity._sql_double(v)} AS c{i}" for i, v in enumerate(vals)]
+    )
+    assert {f.dataType.simpleString() for f in df.schema.fields} == {"double"}
+    row = df.first()
+    for v, g in zip(vals, row):
+        if math.isnan(v):
+            assert math.isnan(g)
+        else:
+            assert struct.pack("<d", g) == struct.pack("<d", v), (v, g)
+
+
+def test_lsh_plan_build_is_dim_independent(spark):
+    """Building the signature plan costs a fixed number of py4j round
+    trips, whatever the dimension: the planes are SQL text, not one
+    Column call per coefficient. py4j's releases of dead proxies are
+    not counted: they fire whenever Python's collector frees objects
+    made earlier."""
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(command, *a, **k):
+        calls[0] += not command.startswith(release)
+        return send(command, *a, **k)
+
+    similarity.hyperplane_signature(df, 8)  # warm-up
+    counts = []
+    for dim in (8, 512):
+        calls[0] = 0
+        client.send_command = counting
+        try:
+            similarity.hyperplane_signature(df, dim)
+        finally:
+            client.send_command = send
+        counts.append(calls[0])
+    assert counts[0] == counts[1] and counts[0] <= 100, counts
 
 
 def test_document_stats(spark, docs):
