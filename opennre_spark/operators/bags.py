@@ -145,7 +145,7 @@ def bag_scores_fused(
     )
     with_rep = method != "one"
 
-    def run(batches):
+    def bag_kernel(batches):
         from .scoring import _batch_scorer
 
         # one model: the scoring kernel and the bag kernel share it
@@ -159,7 +159,7 @@ def bag_scores_fused(
             bag_cap, bag_size, bag_seed,
         )
 
-    return part.mapInArrow(run, schema=BAG_SCHEMA)
+    return part.mapInArrow(bag_kernel, schema=BAG_SCHEMA)
 
 
 def _bag_walk(batches, score, method, weights, bag_cap, bag_size, bag_seed):

@@ -236,10 +236,17 @@ def minhash_dedup(
     themselves. Filter `doc_id == cluster_id` to keep representatives.
     """
     pairs = minhash_dup_pairs(docs, id_col, text_col, jaccard_threshold, **kwargs)
+    return _cluster_ids(docs, id_col, pairs)
+
+
+def _cluster_ids(items: DataFrame, id_col: str, pairs: DataFrame) -> DataFrame:
+    """(id, cluster_id) of every item: the connected component (min
+    member id) of its (id_a, id_b) near-dup pairs, or its own id when it
+    has none."""
     comp = connected_components(pairs, src="id_a", dst="id_b")
     return (
-        docs.select(id_col)
-        .join(comp, docs[id_col] == comp.node, "left")
+        items.select(id_col)
+        .join(comp, items[id_col] == comp.node, "left")
         .select(
             F.col(id_col),
             F.coalesce("component", F.col(id_col)).alias("cluster_id"),
@@ -521,15 +528,7 @@ def embedding_dedup(
         embeddings, dim, cosine_threshold, id_col=id_col, vec_col=vec_col,
         **lsh_kwargs,
     )
-    comp = connected_components(pairs, src="id_a", dst="id_b")
-    return (
-        embeddings.select(id_col)
-        .join(comp, embeddings[id_col] == comp.node, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
-        )
-    )
+    return _cluster_ids(embeddings, id_col, pairs)
 
 
 def simhash_dup_pairs(

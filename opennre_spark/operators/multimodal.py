@@ -152,7 +152,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     work is vectorized per batch where the decode allows). Narrow — no
     shuffle; runs wherever the media rows live."""
 
-    def run(batches: Iterator) -> Iterator:
+    def feature_kernel(batches: Iterator) -> Iterator:
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -174,7 +174,7 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.select("media_id", "kind", "payload").mapInArrow(
-        run, schema=FEATURES_SCHEMA
+        feature_kernel, schema=FEATURES_SCHEMA
     )
 
 

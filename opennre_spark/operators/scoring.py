@@ -386,7 +386,7 @@ def _score_frame(
         out_fields.append(T.StructField("rep", T.ArrayType(T.FloatType()), False))
     keep_names = [f.name for f in keep]
 
-    def run(batches: Iterator) -> Iterator:
+    def score_kernel(batches: Iterator) -> Iterator:
         _, score = _batch_scorer(
             encoder, schema, ckpt, with_rep, classifier, micro_batch,
             encoded=encoded,
@@ -396,7 +396,7 @@ def _score_frame(
                 pr, rep = score(rb)
                 yield _emit_scored(rb, keep_names, pr, rep, with_scores, with_rep)
 
-    return df.mapInArrow(run, schema=T.StructType(out_fields))
+    return df.mapInArrow(score_kernel, schema=T.StructType(out_fields))
 
 
 def score_instances(
@@ -473,7 +473,7 @@ def encode_instances(
     out_schema = T.StructType(out_fields)
     keep_names = [f.name for f in keep]
 
-    def run(batches: Iterator) -> Iterator:
+    def encode_kernel(batches: Iterator) -> Iterator:
         import pyarrow as pa
 
         from ..functions.encoding import encode_tokens_batch
@@ -510,7 +510,7 @@ def encode_instances(
                 names.append(out_name)
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return instances.mapInArrow(run, schema=out_schema)
+    return instances.mapInArrow(encode_kernel, schema=out_schema)
 
 
 def score_encoded(

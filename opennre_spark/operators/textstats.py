@@ -112,7 +112,7 @@ def winnow_fingerprints(
         [id_field, T.StructField("fp", T.LongType(), False)]
     )
 
-    def run(batches):
+    def winnow_kernel(batches):
         import pyarrow as pa
 
         for rb in batches:
@@ -150,7 +150,7 @@ def winnow_fingerprints(
                 names=[id_col, "fp"],
             )
 
-    return staged.mapInArrow(run, schema=out_schema)
+    return staged.mapInArrow(winnow_kernel, schema=out_schema)
 
 
 def _stats_struct(tv: Column, t: Column) -> Column:

@@ -269,7 +269,7 @@ def encode_labeled(
     )
     keep = [f.name for f in instances.schema.fields if f.name in _ENC_COLS]
 
-    def run(batches):
+    def train_encode_kernel(batches):
         import pyarrow as pa
 
         from .scoring import _int_col, _list_i32
@@ -324,7 +324,7 @@ def encode_labeled(
                     names.append("mask")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
-    return instances.mapInArrow(run, schema=out_schema)
+    return instances.mapInArrow(train_encode_kernel, schema=out_schema)
 
 
 def assemble_train_bags(
@@ -388,7 +388,7 @@ def _partials(weights_bc, salt: tuple, micro_batches):
     a stream (deterministic given the schedule; a different stream than
     torch's, documented delta) — and is drawn from only at dropout > 0."""
 
-    def run(batches):
+    def partial_kernel(batches):
         from pyspark import TaskContext
 
         weights = weights_bc.value
@@ -413,7 +413,7 @@ def _partials(weights_bc, salt: tuple, micro_batches):
                 }
             )
 
-    return run
+    return partial_kernel
 
 
 def _bag_micro_batches(

@@ -53,33 +53,44 @@ def test_no_orphan_oracles_and_all_callables():
         assert isinstance(sql, str) and sql.strip(), name
 
 
-def test_pyfiles_zip_contains_every_module():
-    """The committed spark-submit artifact (dist/opennre_spark.zip)
-    must contain every package module and data fixture WITH the same
-    bytes as the working tree — a stale zip ships executors that
-    silently lack new modules (this caught the round-3/4 additions
-    missing from the round-2 build) or, worse, run OUTDATED copies of
-    present ones (a name-only check let exactly that land in r5:
-    relations.py was in the zip but predated the wiki20m_shaped
-    schema)."""
+def _build_pyfiles_zip(out_dir) -> str:
+    """Build the spark-submit artifact with tools/make_pyfiles.py into
+    out_dir, as a user would (the zip is a build output, not in git)."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
+    zpath = os.path.join(str(out_dir), "opennre_spark.zip")
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "make_pyfiles.py"), zpath],
+        check=True, capture_output=True, timeout=120,
+    )
+    return zpath
+
+
+def test_pyfiles_zip_contains_every_module(tmp_path):
+    """The spark-submit artifact tools/make_pyfiles.py builds must
+    contain every package module and data fixture WITH the same bytes as
+    the working tree — a zip missing modules ships executors that
+    silently lack them (this caught the round-3/4 additions missing
+    from the round-2 build) or, worse, run OUTDATED copies of present
+    ones (a name-only check let exactly that land in r5: relations.py
+    was in the zip but predated the wiki20m_shaped schema)."""
     import os
     import zipfile
 
     repo = os.path.join(os.path.dirname(__file__), "..")
-    zpath = os.path.join(repo, "dist", "opennre_spark.zip")
+    zpath = _build_pyfiles_zip(tmp_path)
     zf = zipfile.ZipFile(zpath)
     names = set(zf.namelist())
 
     def check(rel: str, abspath: str):
-        assert rel in names, (
-            f"{rel} missing from dist/opennre_spark.zip — "
-            "run python tools/make_pyfiles.py"
-        )
+        assert rel in names, f"{rel} missing from the make_pyfiles zip"
         with open(abspath, "rb") as f:
             assert zf.read(rel) == f.read(), (
-                f"{rel} in dist/opennre_spark.zip is STALE (bytes "
-                "differ from the working tree) — run "
-                "python tools/make_pyfiles.py"
+                f"{rel} in the make_pyfiles zip is STALE (bytes differ "
+                "from the working tree)"
             )
 
     for root, _, files in os.walk(os.path.join(repo, "opennre_spark")):
@@ -95,18 +106,16 @@ def test_pyfiles_zip_contains_every_module():
             check(f"fixtures/{f}", os.path.join(fx, f))
 
 
-def test_pyfiles_zip_imports_standalone():
+def test_pyfiles_zip_imports_standalone(tmp_path):
     """Executors import the package FROM the zip (spark-submit
     --py-files), so zipimport must resolve the package AND its data
     fixtures (rel2id json, seed-frozen weights) without a filesystem
     checkout — subprocess with only the zip on sys.path. Importing the
     package from the zip installs the zip re-read guard, so a later
     importlib.invalidate_caches() does not re-read the unchanged zip."""
-    import os
     import subprocess
     import sys
 
-    repo = os.path.abspath(os.path.join(os.path.dirname(__file__), ".."))
     code = (
         "import sys; sys.path.insert(0, sys.argv[1])\n"
         "from opennre_spark import relations\n"
@@ -123,9 +132,8 @@ def test_pyfiles_zip_imports_standalone():
         "print('zip-import-ok')\n"
     )
     p = subprocess.run(
-        [sys.executable, "-c", code,
-         os.path.join(repo, "dist", "opennre_spark.zip")],
-        capture_output=True, text=True, cwd="/tmp", timeout=120,
+        [sys.executable, "-c", code, _build_pyfiles_zip(tmp_path)],
+        capture_output=True, text=True, cwd=str(tmp_path), timeout=120,
     )
     assert p.returncode == 0, p.stderr[-1500:]
     assert "zip-import-ok" in p.stdout

@@ -8,8 +8,14 @@ share a canonical id).
 import pytest
 
 from opennre_spark import relations
-from opennre_spark.operators import dedup
+from opennre_spark.operators import dedup, linking
 from opennre_spark.operators.linking import connected_components, link_entities
+
+# driver bounds: the default (driver finish only), 0 (star rounds to the
+# fixed point, labels read in Spark), 5 (star rounds, then the driver
+# finish once the edge list has shrunk to 5 rows, or the fixed point on
+# a component with more than 5 non-root nodes)
+_BOUNDS = (linking._DRIVER_ROWS, 0, 5)
 
 
 def test_connected_components_basic(spark):
@@ -34,13 +40,38 @@ def test_connected_components_long_chain(spark):
     assert len(comp) == n + 1
 
 
-def test_connected_components_raises_when_max_iter_runs_out(spark):
-    """Unconverged labels are an error, not a result."""
+def test_connected_components_raises_when_max_iter_runs_out(spark, monkeypatch):
+    """Unconverged labels are an error, not a result. The 41-node path
+    fits the driver, so the bound is lowered to 0 to make it take the
+    star rounds that max_iter bounds."""
+    monkeypatch.setattr(linking, "_DRIVER_ROWS", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="max_iter=1"):
         connected_components(edges, max_iter=1)
+
+
+def test_connected_components_star_rounds_then_driver_finish(spark, monkeypatch):
+    """Above the bound the star rounds run first, then the driver
+    finishes the labelling once the edge list fits. The 41-node path is
+    listed in both directions (80 rows above a bound of 45); the star
+    forest of a connected 41-node graph keeps 40 edges, so no bound
+    below 40 can ever take the driver finish on it."""
+    edges = [(i, i + 1) for i in range(40)] + [(i + 1, i) for i in range(40)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    finished = []
+    real = linking._label_on_driver
+
+    def finish(spark, tbl):
+        finished.append(tbl.num_rows)
+        return real(spark, tbl)
+
+    monkeypatch.setattr(linking, "_DRIVER_ROWS", 45)
+    monkeypatch.setattr(linking, "_label_on_driver", finish)
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _uf_oracle(edges)
+    assert len(finished) == 1 and 40 <= finished[0] <= 45
 
 
 def _uf_oracle(edges):
@@ -80,20 +111,36 @@ def _uf_oracle(edges):
         [(a, b) for a in range(4) for b in range(a + 1, 4)]
         + [(a, b) for a in range(20, 24) for b in range(a + 1, 24)]
         + [(9, 8), (8, 7), (7, 9)],
+        # pure self-loops, isolated edges given both ways and twice, a
+        # long path whose ids run against its order, and a cycle
+        [(3, 3), (4, 4), (50, 51), (51, 50), (50, 51), (60, 61)]
+        + [(100 - i, 100 - i - 1) for i in range(30)]
+        + [(200, 203), (203, 201), (201, 202), (202, 200)],
+        # a 5-clique listed in both directions with self-loops: 20 rows
+        # but 4 non-root nodes, so bound 5 finishes on the driver after
+        # the first star round
+        [(a, b) for a in range(10, 15) for b in range(10, 15)],
     ],
 )
-def test_connected_components_structured_vs_union_find(spark, edges):
+def test_connected_components_structured_vs_union_find(spark, monkeypatch, edges):
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.component for r in connected_components(df).collect()}
-    assert got == _uf_oracle(edges)
+    for bound in _BOUNDS:
+        monkeypatch.setattr(linking, "_DRIVER_ROWS", bound)
+        out = connected_components(df)
+        assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+            ("node", "bigint"), ("component", "bigint")
+        ], bound
+        got = {r.node: r.component for r in out.collect()}
+        assert got == _uf_oracle(edges), f"bound {bound}"
 
 
-def test_connected_components_property_vs_union_find(spark):
+def test_connected_components_property_vs_union_find(spark, monkeypatch):
     """CC underpins three oracle-checked operators (linking, minhash
-    clusters, embedding clusters); property-check the large-star/
-    small-star implementation against union-find on seeded random
-    graphs — mixes of stars, chains, cliques, duplicate and reversed
-    edges, self-loops (VERDICT r2 item 7)."""
+    clusters, embedding clusters); property-check it against union-find
+    on seeded random graphs — mixes of stars, chains, cliques, duplicate
+    and reversed edges, self-loops (VERDICT r2 item 7) — at every
+    driver bound: the driver finish alone, the star rounds alone, and
+    star rounds followed by the driver finish."""
     import random
 
     for seed in range(6):
@@ -109,8 +156,11 @@ def test_connected_components_property_vs_union_find(spark):
         chain = rng.sample(range(n), min(5, n))
         edges += list(zip(chain, chain[1:]))
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = {r.node: r.component for r in connected_components(df).collect()}
-        assert got == _uf_oracle(edges), f"seed {seed}: CC != union-find"
+        want = _uf_oracle(edges)
+        for bound in _BOUNDS:
+            monkeypatch.setattr(linking, "_DRIVER_ROWS", bound)
+            got = {r.node: r.component for r in connected_components(df).collect()}
+            assert got == want, f"seed {seed}, bound {bound}: CC != union-find"
 
 
 class _PairFinderCalled(Exception):
@@ -191,3 +241,21 @@ def test_canonical_triples_merges_variants(spark):
     assert subj == "A. Moreno"  # lexicographically smallest cluster member
     assert obj in ("HELIX DYNAMICS", "Helix Dynamics")
     assert score == 0.9 and support == 3
+
+
+def test_connected_components_driver_finish_large_shuffled_graph(spark):
+    """The driver finish on thousands of nodes: long paths with shuffled
+    ids (the worst case for min-label propagation), random extra edges
+    and isolated pairs, against union-find."""
+    import random
+
+    rng = random.Random(7)
+    ids = rng.sample(range(10**9), 6000)
+    edges = list(zip(ids[:3000], ids[1:3001]))
+    edges += [(ids[3001 + i], ids[3002 + i]) for i in range(0, 2000, 2)]
+    edges += [
+        (rng.choice(ids[3100:]), rng.choice(ids[3100:])) for _ in range(1500)
+    ]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    got = {r.node: r.component for r in connected_components(df).collect()}
+    assert got == _uf_oracle(edges)

@@ -1,21 +1,22 @@
 """Package opennre_spark for spark-submit --py-files (north rule: the
 job runs via spark-submit on a multi-executor cluster).
 
-Usage: python tools/make_pyfiles.py  ->  dist/opennre_spark.zip
+Usage: python tools/make_pyfiles.py [OUT]  ->  OUT (default
+dist/opennre_spark.zip). The zip is a build output, not kept in git.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(REPO, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "opennre_spark.zip")
+def main(out: str | None = None) -> str:
+    out = out or os.path.join(REPO, "dist", "opennre_spark.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     pkg = os.path.join(REPO, "opennre_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _, files in os.walk(pkg):
@@ -38,4 +39,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])
